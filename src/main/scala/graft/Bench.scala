@@ -1,21 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // cached plans get AQE-coalesced partitioning (see GraftSession —
-      // multi-reader caches otherwise pay full-fan-out in-memory scans)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietAuditedWarnings()
+    val spark = GraftSession("graft-bench", cpus.toInt)
     // Untimed warmup: JVM/codegen/JIT and file-listing costs land here, not
     // on whichever query happens to run first. One representative per
     // expression family (relational, shingle/canon dedup, simhash, text,
@@ -68,15 +56,19 @@ object Bench {
     // machine's actual capability rather than the neighbors' load.
     // A failed run must never be eligible for the minimum (its
     // time-to-exception would masquerade as a fast success): failures
-    // score +Infinity within a pass, and a query that failed BOTH passes
-    // reports -1 — visible in the output rather than silently averaged.
+    // score +Infinity within a pass and print their message to stderr; a
+    // query that failed every pass reports -1 in the detail, is named in
+    // the output's "failed" list, and makes the total null.
     def passOver(names: Seq[String]): Seq[(String, Double)] =
       names.map { name =>
         val fn = SparkEntry.queries(name)
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            false
+          }
           finally spark.catalog.clearCache() // release per-query caches
         name -> (if (ok) (System.nanoTime() - t0) / 1e9 else Double.PositiveInfinity)
       }
@@ -156,9 +148,12 @@ object Bench {
     val rm = results.toMap
     val qs = headline.flatMap(k => rm.get(k).map(v => "\"" + k + "\":" + f(v)))
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    // a failed query has no time, so any failure leaves the total unknown
+    val failed = results.collect { case (k, v) if v < 0 => k }
+    val total = if (failed.nonEmpty) "null" else f(results.map(_._2).sum)
+    val failedJs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val load = stamps.mkString("{", ",", "}")
-    println(s"""{"metric":"total_sec_all_${results.size}_queries","value":${f(total)},"unit":"sec","queries":$qs,"load":$load,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total_sec_all_${results.size}_queries","value":$total,"unit":"sec","failed":$failedJs,"queries":$qs,"load":$load,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

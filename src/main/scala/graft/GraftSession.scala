@@ -1,12 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-/** Session factory tuned for the harness (local[N]) but configured the way a
-  * 1000-executor cluster run would be: AQE on (runtime coalescing, skew-join
-  * splitting), shuffle partitions sized to cores (on a real cluster this is
-  * set to 2-3x total executor cores or left to AQE), UTC session time zone so
-  * timestamp semantics match the DuckDB oracle.
+/** The one session factory: every session in this codebase (Bench, Verify,
+  * the tools, the test suites) is built here. Tuned for the harness
+  * (local[N]) but configured the way a 1000-executor cluster run would be:
+  * the graft SQL functions, planner strategy and optimizer rule come in
+  * through `spark.sql.extensions` and the lake through a catalog conf,
+  * exactly as a cluster deploys them; shuffle partitions are sized to
+  * cores (on a real cluster this is set to 2-3x total executor cores or
+  * left to AQE, which is on by default); UTC session time zone so
+  * timestamp semantics match the DuckDB oracle. Only settings that differ
+  * from Spark's defaults are listed.
   *
   * Reference context: the reference (Steel Industry Energy Consumption
   * Prediction.py:21-27) relies on the ambient Databricks session; we make the
@@ -51,10 +57,9 @@ object GraftSession {
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.sql.catalog.graft_lake", "graft.sources.GraftLakeCatalog")
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Let AQE right-size CACHED plans too (off by default for plan-reuse
       // compatibility): without it every .cache() materializes at the full
       // pre-AQE partition fan-out and each reader pays an N-task in-memory
@@ -65,12 +70,42 @@ object GraftSession {
       // 15.5->9.9 s, d03 8.2->1.9 s, g15 14.9->10.0 s (same box window).
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.filterPushdown", "true")
+      // some testdata generations carried events.ts as TIMESTAMP(NANOS);
+      // with this flag those surface as LongType nanos, which
+      // Tables.normalizeTs maps to TIMESTAMP alongside the NTZ/micros
+      // layouts newer generations ship
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    // Extensions are static: getOrCreate on an already-running SparkContext
+    // that was started without them returns a session that lacks them, and
+    // the first graft query would fail deep inside analysis instead.
+    if (!spark.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_cosine")))
+      throw new IllegalStateException(
+        "GraftSession: the session lacks graft.functions.GraftExtensions, most likely " +
+          "because a SparkContext started without spark.sql.extensions was already " +
+          "running; stop it before calling GraftSession")
     spark.sparkContext.setLogLevel("WARN")
     quietAuditedWarnings()
     spark
+  }
+
+  /** Runs `body` with the given session confs set, then puts every key back
+    * as it was: a key that was set gets its old value again, a key that
+    * was unset is unset again, also when `body` throws. Nested scopes
+    * restore in order, so an inner scope never clobbers an outer value.
+    *
+    * The confs are session-wide state: while the scope is open, every other
+    * query on the same session sees them too. This is not safe under
+    * concurrent queries on one session; the callers here run their queries
+    * one at a time.
+    */
+  def withConf[T](spark: SparkSession)(kvs: (String, String)*)(body: => T): T = {
+    val explicit = spark.conf.getAll
+    val saved = kvs.map { case (k, _) => k -> explicit.get(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 }

@@ -15,7 +15,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.StarQueries.q01PricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each function
+    * expects a session built by [[GraftSession]]: the graft SQL functions,
+    * the as-of join strategy and the `graft_lake` catalog come from it, and
+    * no query installs them itself. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     operators.StarQueries.queries ++
       operators.ExtendedQueries.queries ++

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,21 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // some testdata generations carried events.ts as TIMESTAMP(NANOS);
-      // with this flag those surface as LongType nanos, which
-      // Tables.normalizeTs maps to TIMESTAMP alongside the NTZ/micros
-      // layouts newer generations ship
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // cached plans get AQE-coalesced partitioning (see GraftSession)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietAuditedWarnings()
+    val spark = GraftSession("graft-verify", cpus.toInt)
     // pin the sidecar-oracle tag to THIS run's sf dir before any oracle
     // text is built — dumped SQL must point at the sidecars this run writes
     Sidecars.oracleDir = sfDir

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, ImplicitCastInputTypes}
@@ -86,37 +85,22 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object GraftFunctions {
-
-  val cosineInfo = new ExpressionInfo(
+object CosineSimilarity {
+  val info = new ExpressionInfo(
     classOf[CosineSimilarity].getName, null, "graft_cosine",
     "graft_cosine(a, b) - cosine similarity between two numeric arrays.", "")
-
-  /** Register graft SQL functions on an existing session (idempotent —
-    * checks for an existing registration first, so the many per-query
-    * register calls don't each log a "replaced a previously registered
-    * function" warning into the run tail). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    if (!reg.functionExists(FunctionIdentifier("graft_maxsim"))) {
-      reg.createOrReplaceTempFunction(
-        "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_topk", exprs => GraftTopK(exprs(0), exprs(1), exprs(2)), "built-in")
-      reg.createOrReplaceTempFunction(
-        "graft_maxsim", exprs => MaxSimScore(exprs(0), exprs(1), exprs(2)), "built-in")
-    }
-  }
 }
 
-/** Session-extension registration (spark.sql.extensions=graft.functions.GraftExtensions)
-  * — the deployment path for clusters, equivalent to [[GraftFunctions.register]].
+/** Session extension (spark.sql.extensions=graft.functions.GraftExtensions):
+  * the one install path for the graft SQL functions, the as-of join
+  * strategy and the edit-distance guard rule. [[graft.GraftSession]] sets
+  * it; a cluster sets the same conf at submit time.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectFunction((
       FunctionIdentifier("graft_cosine"),
-      GraftFunctions.cosineInfo,
+      CosineSimilarity.info,
       (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
     e.injectFunction((
       FunctionIdentifier("graft_topk"),

@@ -845,7 +845,6 @@ object DedupQueries {
       .join(e.select(col("vec_id").as("partner"), col("v").as("pv")), "partner")
       .select((col("vec_id") + lit(1000000L)).as("vec_id"), col("label"),
         expr("zip_with(v, pv, (a, b) -> a + 0.1d * b)").as("v"))
-    graft.functions.GraftFunctions.register(s)
     val corpus = e.unionByName(derived)
       .withColumn("norm", sqrt(dot("v", "v")))
       .localCheckpoint() // both sides of the self-join below + codebook scan
@@ -1357,7 +1356,6 @@ object DedupQueries {
     */
   def d15SemDedup(s: SparkSession, dir: String): DataFrame = {
     import SimilarityQueries.embD
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.spread(Tables.embeddings(s, dir)).withColumn("v", embD)
       .select(col("vec_id"), col("label"), col("v"))
     val n = e.count() // corpus size for the mod-n partner index (d07's idiom)

@@ -327,7 +327,6 @@ object ExtendedQueries {
     * proving the custom operator's semantics against a stock engine.
     */
   def q55TopKNative(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     Tables.orders(s, dir).createOrReplaceTempView("orders_topk_v")
     s.sql(
       """SELECT o_custkey, CAST(pos + 1 AS INT) AS rn,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
@@ -117,19 +117,17 @@ object GraphQueries {
     // adjacency (PlanShapeSpec pins the no-re-exchange property; at
     // 100 TB that is a per-round |adj| shuffle). Cheap audit-scale
     // rounds are not worth breaking the round contract.
-    val s = edges.sparkSession
-    val prev = s.conf.get("spark.sql.adaptive.enabled", "true")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("u")).orderBy(col("v"))
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    try edges
-      .withColumn("rn", row_number().over(w))
-      .withColumn("seg", expr(s"(rn - 1) div $SegCap"))
-      .groupBy(col("u"), col("seg"))
-      .agg(max(col("du")).as("du"),
-        collect_list(struct(col("v"), col("sv"))).as("ts"))
-      .localCheckpoint()
-    finally s.conf.set("spark.sql.adaptive.enabled", prev)
+    GraftSession.withConf(edges.sparkSession)("spark.sql.adaptive.enabled" -> "false") {
+      edges
+        .withColumn("rn", row_number().over(w))
+        .withColumn("seg", expr(s"(rn - 1) div $SegCap"))
+        .groupBy(col("u"), col("seg"))
+        .agg(max(col("du")).as("du"),
+          collect_list(struct(col("v"), col("sv"))).as("ts"))
+        .localCheckpoint()
+    }
   }
 
   /** Shared fixed-point propagation core (g01/g02): 5 rounds of

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1937,10 +1937,6 @@ object PipelineQueries {
     * property of the statement (see LakeCatalog.scala's scaling note).
     */
   def p29MergeInto(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      s.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     s.sql("DROP TABLE IF EXISTS graft_lake.corpus")
     s.sql("""CREATE TABLE graft_lake.corpus
             |(doc_id BIGINT, source STRING, len BIGINT, ver BIGINT, stale BIGINT)""".stripMargin)
@@ -2085,17 +2081,10 @@ object PipelineQueries {
       |GROUP BY c_mktsegment, salt_factor, p95_cnt, max_cnt, n_keys
       |ORDER BY c_mktsegment""".stripMargin
 
-  private def registerLake(s: SparkSession): Unit =
-    if (!s.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      s.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
-
   /** (Re)materialize the docs stats frame as a fresh lake table (per-run
     * idempotence: drop + create + one append commit). */
   private def lakeDocsTable(s: SparkSession, dir: String, table: String,
       extra: Seq[(String, org.apache.spark.sql.Column)] = Nil): Unit = {
-    registerLake(s)
     s.sql(s"DROP TABLE IF EXISTS graft_lake.$table")
     val extraDdl = extra.map { case (n, _) => s", $n BIGINT" }.mkString
     s.sql(s"CREATE TABLE graft_lake.$table (doc_id BIGINT, source STRING, n_chars BIGINT$extraDdl)")
@@ -2222,7 +2211,6 @@ object PipelineQueries {
     * filtering for it — p29 covers it on the whole-table group.
     */
   def p34PartitionedMerge(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.corpus_part")
     s.sql("""CREATE TABLE graft_lake.corpus_part
             |(doc_id BIGINT, source STRING, n_chars BIGINT, ver BIGINT)
@@ -2313,7 +2301,6 @@ object PipelineQueries {
     * sf0.01, 4 of 100 at sf0.1 — the skipped fraction GROWS with data).
     */
   def p35ZoneSkip(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.scan_skip")
     s.sql("""CREATE TABLE graft_lake.scan_skip
             |(doc_id BIGINT, source STRING, n_chars BIGINT, batch BIGINT)
@@ -2383,7 +2370,6 @@ object PipelineQueries {
     * the O(touched)-not-O(table) incremental contract is inside the
     * hash, not just asserted in a spec. */
   def p36IncrementalChanges(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.changes_inc")
     s.sql("""CREATE TABLE graft_lake.changes_inc
             |(doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -2443,7 +2429,6 @@ object PipelineQueries {
     * rows, and the v1 time-travel column count (pre-ALTER snapshots
     * surface their own 3-column schema, like Delta). */
   def p37SchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.evo")
     s.sql("""CREATE TABLE graft_lake.evo
             |(doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -2511,7 +2496,6 @@ object PipelineQueries {
     * same box probe goes from O(all ingest files) to O(overlapping
     * ranges) with zero change to the query. */
   def p38OptimizeLayout(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.opt")
     s.sql("CREATE TABLE graft_lake.opt (doc_id BIGINT, source STRING, n_chars BIGINT)")
     val docs = Tables.documents(s, dir)
@@ -2582,7 +2566,6 @@ object PipelineQueries {
     * never "older than the live set") is the correctness line this row
     * hash-pins. */
   def p39VacuumRetention(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.vac")
     s.sql("CREATE TABLE graft_lake.vac (doc_id BIGINT, source STRING, n_chars BIGINT)")
     val docs = Tables.documents(s, dir)
@@ -2644,7 +2627,6 @@ object PipelineQueries {
     * is — at 100 TB a restore is a pure metadata operation regardless
     * of table size. */
   def p40RestoreVersion(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.restore_demo")
     s.sql("""CREATE TABLE graft_lake.restore_demo
             |(doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -2710,7 +2692,6 @@ object PipelineQueries {
     * thousand files), so the scan is one honest metadata partition
     * while the data it describes can be 100 TB. */
   def p41MetadataTables(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.meta_demo")
     s.sql("""CREATE TABLE graft_lake.meta_demo
             |(doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -2805,7 +2786,6 @@ object PipelineQueries {
     * flag, the live constraint count, and version stability (failed
     * writes must not advance the log). */
   def p42CheckConstraints(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.cons")
     s.sql("CREATE TABLE graft_lake.cons (doc_id BIGINT, source STRING, n_chars BIGINT)")
     s.sql("""ALTER TABLE graft_lake.cons SET TBLPROPERTIES (
@@ -2871,7 +2851,6 @@ object PipelineQueries {
     * references exactly the untouched source files (one per source
     * group minus the one it rewrote). */
   def p43ShallowClone(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.clone_dst")
     s.sql("DROP TABLE IF EXISTS graft_lake.clone_src")
     s.sql("""CREATE TABLE graft_lake.clone_src
@@ -2944,7 +2923,6 @@ object PipelineQueries {
     * one v1 data file left the live set, and the v1→v4 CDC classified
     * counts (reinserted-unchanged rows correctly absent). */
   def p44MergeOnRead(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.mor")
     s.sql("""CREATE TABLE graft_lake.mor
             |(doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -3029,7 +3007,6 @@ object PipelineQueries {
     * (wrong generated value, explicit identity insert), with version
     * stability proving the failed writes committed nothing. */
   def p45DefaultColumns(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.defcols")
     s.sql("DROP TABLE IF EXISTS graft_lake.defids")
     s.sql("""CREATE TABLE graft_lake.defcols (
@@ -3117,7 +3094,6 @@ object PipelineQueries {
     * dependent, so the hash pins the inequality and Round10OpsSpec pins
     * the 2-D-beats-1-D separation on a deterministic grid. */
   def p46ZorderOptimize(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.zopt")
     s.sql("CREATE TABLE graft_lake.zopt (doc_id BIGINT, n_chars BIGINT)")
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("n_chars"))
@@ -3194,7 +3170,6 @@ object PipelineQueries {
     * MERGE every live file's group key has the NEW spec's arity; and
     * `n_live_groups` pins the final per-source layout. */
   def p47PartitionEvolution(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.pevo")
     s.sql("CREATE TABLE graft_lake.pevo (doc_id BIGINT, source STRING, n_chars BIGINT)")
     val docs = Tables.documents(s, dir)
@@ -3292,7 +3267,6 @@ object PipelineQueries {
     * false-positive rate is ~1e-8, and the filters are deterministic,
     * so the equality is exact, not probabilistic hand-waving). */
   def p48BloomIndex(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.bloomt")
     s.sql("""CREATE TABLE graft_lake.bloomt
             |(doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -3362,7 +3336,6 @@ object PipelineQueries {
     * footprints, and `bad_refused` pins the loud rejection of a
     * non-partition filter. */
   def p49PartitionOverwrite(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.povr")
     s.sql("""CREATE TABLE graft_lake.povr
             |(doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -3447,7 +3420,6 @@ object PipelineQueries {
     * number is restated from first principles by the oracle — the CALL
     * surface must report the same truth the library calls do. */
   def p50SqlProcedures(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.proc_demo")
     s.sql("CREATE TABLE graft_lake.proc_demo (doc_id BIGINT, n_chars BIGINT)")
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("n_chars"))
@@ -3521,7 +3493,6 @@ object PipelineQueries {
     * time travel to a pre-rename version surfaces the era's own
     * logical schema. */
   def p51RenameColumn(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.renm")
     s.sql("CREATE TABLE graft_lake.renm (doc_id BIGINT, source STRING, nc BIGINT)")
     val docs = Tables.documents(s, dir)
@@ -3575,7 +3546,6 @@ object PipelineQueries {
     * `old_files_intact` pins that the drop rewrote nothing (the v1 files
     * are still live and still physically carry the column). */
   def p52DropColumn(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.drp")
     s.sql("CREATE TABLE graft_lake.drp (doc_id BIGINT, source STRING, lang STRING, n_chars BIGINT)")
     val docs = Tables.documents(s, dir)
@@ -3632,7 +3602,6 @@ object PipelineQueries {
     * from the store's replay audit); `v5_rows` time-travels below the
     * checkpoint afterwards; the aggregates restate the 12 slices. */
   def p53LogCheckpoint(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.ckpt")
     s.sql("CREATE TABLE graft_lake.ckpt (doc_id BIGINT, n_chars BIGINT)")
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("n_chars"))
@@ -3675,7 +3644,6 @@ object PipelineQueries {
     * `join_exchanges`, the shuffle-exchange count inside the SortMergeJoin
     * subtree — 0 is the whole point and anything else fails the oracle. */
   def p54StoragePartitionedJoin(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.spj_chars")
     s.sql("DROP TABLE IF EXISTS graft_lake.spj_langs")
     s.sql("""CREATE TABLE graft_lake.spj_chars (doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -3687,15 +3655,11 @@ object PipelineQueries {
       .writeTo("graft_lake.spj_chars").append()
     docs.select(col("doc_id"), col("source"), col("lang"))
       .writeTo("graft_lake.spj_langs").append()
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.graft.preserve-data-grouping",
-      "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.graft.preserve-data-grouping", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false") // concrete plan to audit
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(s)(
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.graft.preserve-data-grouping" -> "true",
+      "spark.sql.adaptive.enabled" -> "false", // concrete plan to audit
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val a = s.table("graft_lake.spj_chars").groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       val b = s.table("graft_lake.spj_langs").groupBy("source")
@@ -3712,8 +3676,7 @@ object PipelineQueries {
       s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), j.schema)
         .withColumn("join_exchanges", lit(joinExchanges.max.toLong))
         .orderBy(col("source"))
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    }
   }
 
   val p54Sql: String =
@@ -3744,7 +3707,6 @@ object PipelineQueries {
     * travel, `replace_commits` = 1 (the swap is one commit — the
     * non-atomic drop+create path would reset history instead). */
   def p55ReplaceTable(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.rpl")
     Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
@@ -3798,7 +3760,6 @@ object PipelineQueries {
     * travel, and a zone-skip flag — a probe above INT range must skip
     * the narrow-era files off their replayed zones. */
   def p56TypeWidening(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.wid")
     s.sql("CREATE TABLE graft_lake.wid (doc_id BIGINT, n INT)")
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("n_chars"))
@@ -3856,7 +3817,6 @@ object PipelineQueries {
     * one-day-touched flag (the UPDATE's replaced groups all share one
     * day key). */
   def p57HiddenPartitioning(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.hp")
     s.sql("""CREATE TABLE graft_lake.hp
             |(event_id BIGINT, user_id BIGINT, ts TIMESTAMP, cents BIGINT)
@@ -3931,7 +3891,6 @@ object PipelineQueries {
     * append||UPDATE — both land, (d) append||ALTER TBLPROPERTIES —
     * metadata conflict, append aborts; plus one outcome flag per case. */
   def p58OptimisticConcurrency(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.occ"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, source STRING, score BIGINT)
@@ -4029,7 +3988,6 @@ object PipelineQueries {
     * travel, the refs metadata table folded to a literal, and the
     * publish commit's change-feed I/D row counts. */
   def p59BranchWap(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.wap"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, source STRING, score BIGINT)
@@ -4039,10 +3997,8 @@ object PipelineQueries {
       .select(col("doc_id"), col("source"), col("n_chars").as("score"))
     docs.writeTo(key).append() // v1
     s.sql("CALL graft_lake.system.create_branch(tbl => 'wap', name => 'audit')") // v2
-    def onBranch[T](body: => T): T = {
-      s.conf.set("graft.lake.branch", "audit")
-      try body finally s.conf.unset("graft.lake.branch")
-    }
+    def onBranch[T](body: => T): T =
+      GraftSession.withConf(s)("graft.lake.branch" -> "audit")(body)
     // WRITE-AUDIT: the bad batch violates the CHECK constraint ON THE
     // BRANCH — nothing lands anywhere, main never saw it
     val gateCaught = onBranch {
@@ -4137,7 +4093,6 @@ object PipelineQueries {
     * count on `label` for untouched rows, and the pre-merge schema width
     * via time travel. */
   def p60MergeSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.mse"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, source STRING, score BIGINT)
@@ -4198,7 +4153,6 @@ object PipelineQueries {
     * id-uniqueness count, two invariance flags (update, optimize) from
     * version-pinned joins, and the row_id-keyed change-feed U count. */
   def p61RowLineage(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.rowlin"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (
@@ -4266,7 +4220,6 @@ object PipelineQueries {
     * counts for both upsert commits, and the post-OPTIMIZE prune flag
     * with identical aggregates. */
   def p62EqualityDeletes(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.equp"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, source STRING, score BIGINT)
@@ -4356,7 +4309,6 @@ object PipelineQueries {
     * manifest group key, i.e. the reader's co-location proof and the
     * writer's routing are the same function, row for row. */
   def p63BucketSpj(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.bspj_chars")
     s.sql("DROP TABLE IF EXISTS graft_lake.bspj_langs")
     s.sql("""CREATE TABLE graft_lake.bspj_chars (doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -4382,17 +4334,12 @@ object PipelineQueries {
     }
     val fnMatches = got.length == want.size &&
       got.forall { case (p, b) => want.get(p).exists(_ == b) }
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.graft.preserve-data-grouping",
-      "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.graft.preserve-data-grouping", "true")
-      s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(s)(
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.graft.preserve-data-grouping" -> "true",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val perDoc = s.table("graft_lake.bspj_chars")
         .groupBy("doc_id").agg(sum(col("n_chars")).as("chars"))
       val aggExchanges = perDoc.queryExecution.executedPlan.collect {
@@ -4416,8 +4363,7 @@ object PipelineQueries {
         .orderBy(col("source"))
       val rows = res.collect() // materialize under the audited confs
       s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), res.schema)
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    }
   }
 
   val p63Sql: String =
@@ -4451,7 +4397,6 @@ object PipelineQueries {
     * `groups_pruned_gt0` — the window filter skipped whole day groups
     * (scan-stats audit), proving pruning and SPJ compose. */
   def p64TemporalSpj(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.tspj_types")
     s.sql("DROP TABLE IF EXISTS graft_lake.tspj_values")
     s.sql("""CREATE TABLE graft_lake.tspj_types (event_id BIGINT, ts TIMESTAMP, event_type STRING)
@@ -4466,23 +4411,17 @@ object PipelineQueries {
       .writeTo("graft_lake.tspj_values").append()
     val lo = ev.agg(min(col("ts"))).collect()(0).getTimestamp(0)
     val hi = new java.sql.Timestamp(lo.getTime + 10L * 86400000L)
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.requireAllClusterKeysForCoPartition",
-      "spark.sql.graft.preserve-data-grouping",
-      "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.graft.preserve-data-grouping", "true")
-      s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+    GraftSession.withConf(s)(
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.graft.preserve-data-grouping" -> "true",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
       // the join clusters on (event_id, ts) — a SUPERSET of the
       // partitioning's references ({ts}): subset-compatibility is
       // exactly what this conf unlocks (Spark defaults to demanding
       // the clustering equal the partition keys verbatim)
-      s.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val a = s.table("graft_lake.tspj_types")
         .filter(col("ts") >= lit(lo) && col("ts") < lit(hi))
       val b = s.table("graft_lake.tspj_values")
@@ -4504,8 +4443,7 @@ object PipelineQueries {
       val pruned = stats.groupsTotal - stats.groupsScanned
       s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), res.schema)
         .withColumn("groups_pruned_gt0", lit(if (pruned > 0) 1L else 0L))
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    }
   }
 
   val p64Sql: String =
@@ -4541,7 +4479,6 @@ object PipelineQueries {
     * (adversarial 16-task input: none writes MORE files than groups,
     * hash writes EXACTLY one per group), and the group count. */
   def p65WriteDistribution(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.wdist"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -4595,7 +4532,6 @@ object PipelineQueries {
     * `compat_exchanges` = 0, `oneside_exchanges` = 1 (the plain side's
     * single shuffle), and the one-side join's row count. */
   def p66CompatBucketJoin(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     s.sql("DROP TABLE IF EXISTS graft_lake.cb16")
     s.sql("DROP TABLE IF EXISTS graft_lake.cb8")
     s.sql("""CREATE TABLE graft_lake.cb16 (doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -4609,21 +4545,14 @@ object PipelineQueries {
       .writeTo("graft_lake.cb8").append()
     docs.select(col("doc_id"), col("lang"))
       .createOrReplaceTempView("p66_plain")
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled",
-      "spark.sql.sources.v2.bucketing.shuffle.enabled",
-      "spark.sql.graft.preserve-data-grouping",
-      "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      s.conf.set("spark.sql.graft.preserve-data-grouping", "true")
-      s.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      s.conf.set("spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled", "true")
-      s.conf.set("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(s)(
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.graft.preserve-data-grouping" -> "true",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       def joinExchanges(j: DataFrame): Int = {
         val counts = j.queryExecution.executedPlan.collect {
           case sj: org.apache.spark.sql.execution.joins.SortMergeJoinExec =>
@@ -4650,8 +4579,7 @@ object PipelineQueries {
         .orderBy(col("source"))
       val rows = res.collect()
       s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), res.schema)
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    }
   }
 
   val p66Sql: String =
@@ -4679,7 +4607,6 @@ object PipelineQueries {
     * two size audits — size_bytes > 0 and sum(.files.bytes) ==
     * detail.size_bytes. */
   def p67DescribeDetail(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.dd"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -4735,7 +4662,6 @@ object PipelineQueries {
     * DELETE lands deletion vectors and the SAME aggregates recompute
     * from data (pushed_after=0) with the deleted rows gone. */
   def p68AggPushdown(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.aggpd"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, source STRING, n_chars BIGINT, opt BIGINT)
@@ -4803,7 +4729,6 @@ object PipelineQueries {
     * planning-time ScanStats channel) and dpp_used=1 (the executed plan
     * carries a dynamicpruningexpression on the fact scan). */
   def p69RuntimeFiltering(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val fact = "graft_lake.dppfact"
     val dimT = "graft_lake.dppdim"
     s.sql(s"DROP TABLE IF EXISTS $fact")
@@ -4864,7 +4789,6 @@ object PipelineQueries {
     * `tag_below_horizon` = 1 (the tag head predates the horizon — the
     * case that loses data without the ref-aware keep-set). */
   def p70ExpireRefs(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.expref"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -4917,7 +4841,6 @@ object PipelineQueries {
     * math (S_even groups, 4*S_even files), files_after =
     * S_even + 3*(S - S_even), and recompact_groups = 0 (idempotence). */
   def p71SmallFileCompaction(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.cmpct"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -4994,7 +4917,6 @@ object PipelineQueries {
     * saturated columns land within 10% — 3.2 sigma at K=1024), and
     * full sketch coverage. */
   def p72NdvStats(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.ndvt"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key
@@ -5067,7 +4989,6 @@ object PipelineQueries {
     * delete-hit matrix (files x mod classes present), and zero CDC
     * rows out of the rewrite commit. */
   def p73RewriteDeletes(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.rwdel"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -5151,7 +5072,6 @@ object PipelineQueries {
     * `replace`), and the change feed's D-row count for the dropped
     * sources. */
   def p74MetadataDelete(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.mdel"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, source STRING, n_chars BIGINT)
@@ -5228,7 +5148,6 @@ object PipelineQueries {
     * Correctness rides along: per-nation customer counts and exact
     * decimal-summed balances against the DuckDB oracle. */
   def p75StatsBroadcast(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val dimKey = "graft_lake.bnation"
     val factKey = "graft_lake.bcust"
     s.sql(s"DROP TABLE IF EXISTS $dimKey")
@@ -5241,11 +5160,9 @@ object PipelineQueries {
     Tables.customer(s, dir)
       .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"))
       .writeTo(factKey).append()
-    val saved = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set("spark.sql.adaptive.enabled", "false") // static decision only
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760") // stock 10 MB
+    GraftSession.withConf(s)(
+      "spark.sql.adaptive.enabled" -> "false", // static decision only
+      "spark.sql.autoBroadcastJoinThreshold" -> "10485760") { // stock 10 MB
       val j = s.table(factKey)
         .join(s.table(dimKey), col("c_nationkey") === col("n_nationkey"))
         .groupBy(col("n_name"))
@@ -5272,8 +5189,7 @@ object PipelineQueries {
         .withColumn("smj_used", lit(smj.toLong))
         .withColumn("dim_reported_rows", lit(dimReported))
         .orderBy(col("n_name"))
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    }
   }
 
   val p75Sql: String =
@@ -5306,7 +5222,6 @@ object PipelineQueries {
     * own ScanStats prove it opened fewer groups than the table holds
     * (4 queries probe <= 8 of the ~10 cells). */
   def p76AnnLakePruned(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     import SimilarityQueries.{embD, dot}
     val key = "graft_lake.annlake"
     s.sql(s"DROP TABLE IF EXISTS $key")
@@ -5395,7 +5310,6 @@ object PipelineQueries {
     * one more, and the final table equals slices 1-4 by aggregate —
     * restated by the oracle from the corpus. */
   def p77CopyInto(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.landing"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"CREATE TABLE $key (doc_id BIGINT, source STRING, n_chars BIGINT)")
@@ -5485,7 +5399,6 @@ object PipelineQueries {
     * order survives. Correctness rides along: both plans' aggregates
     * equal DuckDB's. */
   def p78CboJoinReorder(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     def buildTables(suffix: String, withNdv: Boolean): (String, String, String) = {
       val (f, da, db) = (s"graft_lake.cbofact$suffix",
         s"graft_lake.cbodima$suffix", s"graft_lake.cbodimb$suffix")
@@ -5520,12 +5433,10 @@ object PipelineQueries {
           sum(col("wa") + col("wb")).as("sum_w"))
       (leafOrder(q), q.collect()(0))
     }
-    val saved = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled",
-      "spark.sql.adaptive.enabled").map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false") // static decision only
+    GraftSession.withConf(s)(
+      "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true",
+      "spark.sql.adaptive.enabled" -> "false") { // static decision only
       val (orderNdv, r) = run("_ndv", withNdv = true)
       val (orderRaw, r2) = run("_raw", withNdv = false)
       import s.implicits._
@@ -5535,8 +5446,7 @@ object PipelineQueries {
           if (r == r2) 1L else 0L))
         .toDF("n_rows", "sum_ids", "sum_w", "ndv_reordered_selective_first",
           "raw_kept_syntactic_order", "orders_agree")
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    }
   }
 
   val p78Sql: String =
@@ -5573,7 +5483,6 @@ object PipelineQueries {
     * aggregates from both plans, and CDC silence (dataChange=false:
     * the analyze commits are invisible to the change feed). */
   def p79AnalyzeBackfill(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val (f, da, db) = ("graft_lake.anzfact", "graft_lake.anzdima",
       "graft_lake.anzdimb")
     Seq(f, da, db).foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
@@ -5595,12 +5504,10 @@ object PipelineQueries {
       .agg(count(lit(1)).as("n_rows"), sum(col("doc_id")).as("sum_ids"),
         sum(col("wa") + col("wb")).as("sum_w"))
     def leafOrder(df: DataFrame): String = v2LeafOrder(df).mkString(">")
-    val saved = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled",
-      "spark.sql.adaptive.enabled").map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "false")
+    GraftSession.withConf(s)(
+      "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true",
+      "spark.sql.adaptive.enabled" -> "false") {
       val (orderBefore, rBefore) = (leafOrder(q), q.collect()(0))
       val vPre = graft.sources.LakeStore.get(f).get.latestVersion
       val calls = Seq(f -> "ka,kb", da -> "ka_d", db -> "kb_d").map {
@@ -5621,8 +5528,7 @@ object PipelineQueries {
         .toDF("n_rows", "sum_ids", "sum_w", "before_syntactic_order",
           "after_reordered", "results_agree", "fact_files_analyzed",
           "columns_sketched", "cdc_rows")
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    }
   }
 
   // ---------------------------------------------------------------- p80
@@ -5649,7 +5555,6 @@ object PipelineQueries {
     * final adaptive plan broadcasts both tiny dims. All four flags +
     * both aggregates in the oracle hash. */
   def p80CboReorderUnderAqe(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     def buildTables(suffix: String, withNdv: Boolean): (String, String, String) = {
       val (f, da, db) = (s"graft_lake.cbofact$suffix",
         s"graft_lake.cbodima$suffix", s"graft_lake.cbodimb$suffix")
@@ -5706,12 +5611,10 @@ object PipelineQueries {
       val (adaptive, bhj) = finalPlan(q)
       (order, q.collect()(0), adaptive, bhj)
     }
-    val saved = Seq("spark.sql.cbo.enabled", "spark.sql.cbo.joinReorder.enabled",
-      "spark.sql.adaptive.enabled").map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-      s.conf.set("spark.sql.adaptive.enabled", "true") // the production mode
+    GraftSession.withConf(s)(
+      "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true",
+      "spark.sql.adaptive.enabled" -> "true") { // the production mode
       val (orderNdv, r, adaptN, bhjN) = run("_qaqe", withNdv = true)
       val (orderRaw, r2, adaptR, _) = run("_raqe", withNdv = false)
       import s.implicits._
@@ -5724,8 +5627,7 @@ object PipelineQueries {
         .toDF("n_rows", "sum_ids", "sum_w", "ndv_reordered_under_aqe",
           "raw_kept_syntactic_order", "orders_agree", "plans_adaptive",
           "both_dims_broadcast")
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    }
   }
 
   // ---------------------------------------------------------------- p81
@@ -5748,7 +5650,6 @@ object PipelineQueries {
     * a shrunk corpus or widened window would silently turn this row
     * into a no-op. */
   def p81PagedHistoryReads(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.pagedhist"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"CREATE TABLE $key (doc_id BIGINT, n_chars BIGINT)")
@@ -5859,7 +5760,6 @@ object PipelineQueries {
     * substrate serves the p76 partition-pruned probe path, so exclusion
     * proven here covers it. */
   def p82AnnUnderDeletes(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     import SimilarityQueries.{embD, dot}
     val key = "graft_lake.annled"
     s.sql(s"DROP TABLE IF EXISTS $key")
@@ -5967,7 +5867,6 @@ object PipelineQueries {
     * `fanout_pruned`; one that over-prunes (unsound bloom/zone/null
     * logic) loses D rows and flips `d_rows`/`d_chars`. */
   def p83UpsertCdcPruned(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.cdcprune"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, n_chars BIGINT)
@@ -6030,7 +5929,6 @@ object PipelineQueries {
     * construction, so a planner that re-seeds, drops a resurrection, or
     * double-delivers flips a hashed column. */
   def p84RestoreRangeCdf(s: SparkSession, dir: String): DataFrame = {
-    registerLake(s)
     val key = "graft_lake.cdfrest"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, n_chars BIGINT)

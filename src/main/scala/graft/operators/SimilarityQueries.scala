@@ -47,7 +47,6 @@ object SimilarityQueries {
     * a substitute where the divisor norms are the unrounded
     * sqrt(dot(v,v)) of the same vectors. */
   private[operators] def cosineScore(a: Column, b: Column): Column = {
-    graft.functions.GraftFunctions.register(SparkSession.active)
     floor(call_function("graft_cosine", a, b) * 1e6 + 0.5) / 1e6
   }
 
@@ -257,7 +256,6 @@ object SimilarityQueries {
     * assignment itself is hash-audited, not just the pair arithmetic.
     */
   def s03NearDupStats(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.spread(Tables.embeddings(s, dir)).withColumn("v", embD)
       .withColumn("norm", sqrt(dot("v", "v")))
       .select(col("label"), col("vec_id"), col("v"), col("norm"))
@@ -331,7 +329,6 @@ object SimilarityQueries {
     * and the PerfSpec compares their wall-clock.
     */
   def s04AnnNative(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.spread(Tables.embeddings(s, dir)).withColumn("v", embD)
       .select(col("vec_id"), col("v"))
     val q = e.filter(col("vec_id") < 5)
@@ -438,11 +435,7 @@ object SimilarityQueries {
     // csim through the codegen'd CosineSimilarity expression (fused loop,
     // norms included — bit-identical to dot/(|a||b|) with HOF sequential
     // sums): the k interpreted HOF dot products per row were the single
-    // most expensive piece of the cell-scoped operators. Self-registers
-    // (idempotent) so resolution never depends on WHICH query analyzed
-    // first on the session — caller-order registration bit us once when a
-    // catalog-map reshuffle changed Verify's iteration order.
-    graft.functions.GraftFunctions.register(SparkSession.active)
+    // most expensive piece of the cell-scoped operators.
     val entries = array(cents.map { case (cell, cv, _) =>
       val cvLit = array(cv.map(lit): _*)
       struct(
@@ -697,7 +690,6 @@ object SimilarityQueries {
     * identical decimal/fold arithmetic.
     */
   def s08LabelCentroids(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.spread(Tables.embeddings(s, dir)).withColumn("v", embD)
     val carr = e.select(col("label"), posexplode(col("v")).as(Seq("dim", "x")))
       .groupBy(col("label"), col("dim")).agg(Tables.davg(col("x")).as("m"))
@@ -950,7 +942,6 @@ object SimilarityQueries {
     * centroids, 8-row argmax window, rollup) is visible instead of a
     * checkpoint leaf. */
   private[graft] def s11Build(s: SparkSession, dir: String, e: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     var cents = e.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("cell"),
         posexplode(col("v")).as(Seq("dim", "m")))
@@ -1334,7 +1325,6 @@ object SimilarityQueries {
       .withColumn("cell", element_at(probeCells(cents, col("v"), 1), 1))
       .select(col("cell"), col("vec_id"), col("v"), col("norm"))
       .localCheckpoint() // two readers: the radius pass and the scan
-    graft.functions.GraftFunctions.register(s)
     val centDf = cents.toSeq.map { case (c, cv, _) => (c, cv.toSeq) }.toDF("cell", "cv")
     val radii: Map[Int, Double] = assigned.join(broadcast(centDf), "cell")
       .select(col("cell"),
@@ -1600,7 +1590,6 @@ object SimilarityQueries {
       |              cast(0.0 as double), (a4, p) -> a4 + p))))))""".stripMargin)
 
   def s16MaxSim(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.spread(Tables.embeddings(s, dir)).withColumn("v", embD)
       .select(col("vec_id"), col("label"), col("v"))
     val cents = codebook(e)
@@ -1712,7 +1701,6 @@ object SimilarityQueries {
     * any float rounding contract.
     */
   def s17Matryoshka(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.spread(Tables.embeddings(s, dir)).withColumn("v", embD)
       .select(col("vec_id"), col("v"))
     val q = plantedQueries(e, k = 5, off = 191, factor = 0.1)
@@ -1914,7 +1902,6 @@ object SimilarityQueries {
     * scoring and both recall joins end to end.
     */
   def s19NprobeSweep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val e = Tables.spread(Tables.embeddings(s, dir)).withColumn("v", embD)
       .select(col("vec_id"), col("label"), col("v"))
     val cents = codebook(e)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Sidecars
+import graft.{GraftSession, Sidecars}
 import graft.streaming.EventStream
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -84,20 +84,21 @@ object StreamingQueries {
       case _ => sessionDefault
     }
 
-  /** Applies the derived count for the duration of one streaming run.
-    * Mutates the session-global shuffle-partition conf: safe while runs
-    * are sequential per session (Bench/Verify are); concurrent streaming
-    * queries on one session would need this serialized. */
+  /** Applies the derived count for the duration of one streaming run
+    * (session-wide, see [[GraftSession.withConf]]). */
   private def withAdaptiveStreamShuffle[T](s: SparkSession, dir: String)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
     // every streaming scenario in this registry streams a frame derived
     // from the events and/or documents base tables of this sf dir
-    val n = derivedStatePartitions(prev.toLong,
+    val n = derivedStatePartitions(s.conf.get(key).toLong,
       s"$dir/events.parquet", s"$dir/documents.parquet")
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
+    GraftSession.withConf(s)(key -> n.toString)(body)
   }
+
+  /** The state store the transformWithState queries (st09, st10, st12)
+    * run on: the v2 state API needs RocksDB (column families). */
+  private val RocksDbStateStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Hourly tumbling-window rollup, streamed: readStream → watermark +
     * window agg → foreachBatch sink (Complete mode, AvailableNow) — the
@@ -524,10 +525,7 @@ object StreamingQueries {
       .repartition(4)
       .write.mode("overwrite").parquet(s"$root/arrivals")
     val schema = s.read.parquet(s"$root/arrivals").schema
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s)(RocksDbStateStore) {
       val name = "graft_st09_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -550,11 +548,6 @@ object StreamingQueries {
         .select(col("user_id"), col("m.n_events").as("n_events"),
           col("m.purchase_cents").as("purchase_cents"))
         .orderBy(col("user_id"))
-    } finally {
-      prevProvider match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -635,10 +628,7 @@ object StreamingQueries {
     val ev = graft.Tables.events(s, dir).select(col("user_id"), col("ts"))
     val mx = ev.agg(max(col("ts")).as("mx"))
     stageTimeRanged(s, ev, root)
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s)(RocksDbStateStore) {
       val name = "graft_st10_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val q = s.readStream
         .schema(s.read.parquet(s"$root/arrivals").schema)
@@ -662,11 +652,6 @@ object StreamingQueries {
         .filter(col("session_end") < col("mx") - expr("INTERVAL 9 HOURS"))
         .select(col("user_id"), col("session_start"), col("session_end"), col("n_events"))
         .orderBy(col("user_id"), col("session_start"))
-    } finally {
-      prevProvider match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -768,10 +753,6 @@ object StreamingQueries {
     * one-shot answer (int64 cents, associative adds).
     */
   def st13StreamMergeUpsert(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      s.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     val root = s"/tmp/graft_stream_${Sidecars.tag(dir)}/st13"
     deleteRecursively(java.nio.file.Paths.get(root))
     graft.Tables.events(s, dir)
@@ -843,10 +824,7 @@ object StreamingQueries {
     val ev = graft.Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     val arrivals = stageTimeRanged(s, ev, root)
-    val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConf(s)(RocksDbStateStore) {
       val name = "graft_st12_" + java.util.UUID.randomUUID().toString.replace("-", "")
       val q = s.readStream
         .schema(s.read.parquet(arrivals).schema)
@@ -872,11 +850,6 @@ object StreamingQueries {
         .groupBy(col("prev_type"), col("event_type"))
         .agg(sum(col("n")).as("n"), countDistinct(col("user_id")).as("n_users"))
         .orderBy(col("prev_type"), col("event_type"))
-    } finally {
-      prevProvider match {
-        case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
     }
   }
 
@@ -913,10 +886,6 @@ object StreamingQueries {
     * per-commit deltas, no more (unchanged rows never appear), no
     * fewer (every touched key appears under its commit). */
   def st14ChangeFeed(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      s.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     val root = s"/tmp/graft_stream_${Sidecars.tag(dir)}/st14"
     deleteRecursively(java.nio.file.Paths.get(root))
     val key = "graft_lake.change_feed"
@@ -999,10 +968,6 @@ object StreamingQueries {
     * definitions. Round9bOpsSpec additionally pins the loud failure on
     * non-append history (a DELETE poisons the stream, as in Delta). */
   def st15StreamLakeSource(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      s.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     val root = s"/tmp/graft_stream_${Sidecars.tag(dir)}/st15"
     deleteRecursively(java.nio.file.Paths.get(root))
     s.sql("DROP TABLE IF EXISTS graft_lake.stream_src")
@@ -1074,10 +1039,6 @@ object StreamingQueries {
     * contract that the streamed feed reveals exactly the per-commit
     * row-level history, OPTIMIZE invisible, nothing re-delivered. */
   def st16StreamChangeFeed(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      s.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     val root = s"/tmp/graft_stream_${Sidecars.tag(dir)}/st16"
     deleteRecursively(java.nio.file.Paths.get(root))
     s.sql("DROP TABLE IF EXISTS graft_lake.cdf_src")
@@ -1161,10 +1122,6 @@ object StreamingQueries {
     * hash-equality pins exactly-once across restarts (nothing
     * re-appended, nothing missed) AND the in-stream transform. */
   def st17StreamLakeSink(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      s.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     val root = s"/tmp/graft_stream_${Sidecars.tag(dir)}/st17"
     deleteRecursively(java.nio.file.Paths.get(root))
     s.sql("DROP TABLE IF EXISTS graft_lake.stream_sink")
@@ -1225,10 +1182,6 @@ object StreamingQueries {
     * source \ replica, both 0) — the replica must equal the source
     * bit-for-bit, or the row fails. */
   def st18CdcReplication(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      s.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     val root = s"/tmp/graft_stream_${Sidecars.tag(dir)}/st18"
     deleteRecursively(java.nio.file.Paths.get(root))
     s.sql("DROP TABLE IF EXISTS graft_lake.cdc_rep_src")
@@ -1308,10 +1261,6 @@ object StreamingQueries {
     * so the row count ITSELF (3, not 1) proves the rate limit split the
     * catch-up. */
   def st19StreamRateLimit(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      s.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     val root = s"/tmp/graft_stream_${Sidecars.tag(dir)}/st19"
     deleteRecursively(java.nio.file.Paths.get(root))
     s.sql("DROP TABLE IF EXISTS graft_lake.rl_src")
@@ -1369,10 +1318,6 @@ object StreamingQueries {
     * default stream over the same history must fail with the
     * append-only error. Both facts are inside the hash. */
   def st20SkipChangeCommits(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      s.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     val root = s"/tmp/graft_stream_${Sidecars.tag(dir)}/st20"
     deleteRecursively(java.nio.file.Paths.get(root))
     s.sql("DROP TABLE IF EXISTS graft_lake.scc_src")
@@ -1451,10 +1396,6 @@ object StreamingQueries {
     * with the new column populated, and the mergeSchema twin stream
     * sailing through the same history uninterrupted. */
   def st21StreamSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    if (!s.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      s.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     val root = s"/tmp/graft_stream_${Sidecars.tag(dir)}/st21"
     deleteRecursively(java.nio.file.Paths.get(root))
     val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("n_chars"))

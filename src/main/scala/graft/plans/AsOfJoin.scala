@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -12,7 +12,8 @@ import org.apache.spark.sql.types.DoubleType
 /** Native AS-OF JOIN — the one operator in this engine whose semantics no
   * built-in composition plans optimally. Tier (c) of the custom-operator
   * preference order: a LogicalPlan node + SparkStrategy + SparkPlan,
-  * registered per-session (see [[AsOfJoin.enable]]).
+  * planned by [[AsOfJoin.Strategy]], which [[graft.functions.GraftExtensions]]
+  * injects into every [[graft.GraftSession]].
   *
   * Semantics (identical to the composed union+window formulation,
   * operators.StarQueries.q31, and therefore to its DuckDB oracle): each
@@ -69,12 +70,6 @@ object AsOfJoin {
     }
   }
 
-  /** Idempotently add the strategy to a session. */
-  def enable(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(Strategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ Strategy
-
   /** Public API: left rows gain `asofColName` = latest right `valueCol`
     * at-or-before the left time within the same key. Key and seq columns
     * must be bigint; time columns timestamp (micros); value double.
@@ -89,7 +84,6 @@ object AsOfJoin {
     require(Seq("backward", "forward", "nearest").contains(direction),
       s"unknown as-of direction $direction")
     val spark = left.sparkSession
-    enable(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(p: LogicalPlan, name: String, accepted: Seq[org.apache.spark.sql.types.DataType],

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -26,24 +25,32 @@ import org.apache.spark.sql.types.IntegerType
   * is never added twice — injected optimizer rules run in a fixed-point
   * batch, so an unguarded rewrite would grow the predicate every pass.
   *
-  * Registration: `injectOptimizerRule` via [[graft.functions.GraftExtensions]]
-  * (cluster deployment) or [[ensureRegistered]] (runtime, the
-  * AsOfJoin.Strategy pattern).
+  * Registration: `injectOptimizerRule` via [[graft.functions.GraftExtensions]],
+  * so every [[graft.GraftSession]] runs it.
   */
 object LevenshteinGuard extends Rule[LogicalPlan] with PredicateHelper {
+
+  /** |length(a) - length(b)|, with a literal side's length already folded
+    * the way ConstantFolding folds it. The rule shares its fixed-point
+    * batch with ConstantFolding, so an unfolded `length('steel plate')`
+    * would become `11` after the guard is added, and the folded guard
+    * would no longer semantically equal the next pass's derivation: every
+    * pass would add another copy. */
+  private def lengthGap(lev: Levenshtein): Expression = {
+    def len(e: Expression) =
+      if (e.foldable) Literal.create(Length(e).eval(), IntegerType) else Length(e)
+    Abs(Subtract(len(lev.left), len(lev.right)))
+  }
 
   private def guards(cond: Expression): Seq[Expression] = {
     val conjuncts = splitConjunctivePredicates(cond)
     val derived = conjuncts.collect {
-      case LessThanOrEqual(lev: Levenshtein, k @ Literal(_, IntegerType))
-          if lev.threshold.isEmpty =>
-        LessThanOrEqual(Abs(Subtract(Length(lev.left), Length(lev.right))), k)
-      case LessThan(lev: Levenshtein, k @ Literal(_, IntegerType))
-          if lev.threshold.isEmpty =>
-        LessThan(Abs(Subtract(Length(lev.left), Length(lev.right))), k)
-      case GreaterThanOrEqual(k @ Literal(_, IntegerType), lev: Levenshtein)
-          if lev.threshold.isEmpty =>
-        LessThanOrEqual(Abs(Subtract(Length(lev.left), Length(lev.right))), k)
+      case LessThanOrEqual(lev: Levenshtein, k @ Literal(_, IntegerType)) if lev.threshold.isEmpty =>
+        LessThanOrEqual(lengthGap(lev), k)
+      case LessThan(lev: Levenshtein, k @ Literal(_, IntegerType)) if lev.threshold.isEmpty =>
+        LessThan(lengthGap(lev), k)
+      case GreaterThanOrEqual(k @ Literal(_, IntegerType), lev: Levenshtein) if lev.threshold.isEmpty =>
+        LessThanOrEqual(lengthGap(lev), k)
     }
     derived.filterNot(g => conjuncts.exists(_.semanticEquals(g)))
   }
@@ -56,10 +63,4 @@ object LevenshteinGuard extends Rule[LogicalPlan] with PredicateHelper {
       val gs = guards(cond)
       if (gs.isEmpty) j else j.copy(condition = Some(And(gs.reduce(And), cond)))
   }
-
-  /** Idempotent runtime registration (same pattern as AsOfJoin.Strategy). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(LevenshteinGuard))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LevenshteinGuard
 }

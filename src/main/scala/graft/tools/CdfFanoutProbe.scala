@@ -16,8 +16,6 @@ object CdfFanoutProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val s = GraftSession("cdf-fanout-probe")
-    s.conf.set("spark.sql.catalog.graft_lake",
-      classOf[graft.sources.GraftLakeCatalog].getName)
     val key = "graft_lake.cdcprobe"
     s.sql(s"DROP TABLE IF EXISTS $key")
     s.sql(s"""CREATE TABLE $key (doc_id BIGINT, n_chars BIGINT)

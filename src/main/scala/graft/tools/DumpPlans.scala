@@ -338,15 +338,11 @@ object DumpPlans {
     // section of its own over the tables p54 just built.
     {
       import org.apache.spark.sql.functions.{col, min, sum}
-      val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.graft.preserve-data-grouping",
-        "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-        .map(k => k -> spark.conf.getOption(k))
-      try {
-        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        spark.conf.set("spark.sql.graft.preserve-data-grouping", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      GraftSession.withConf(spark)(
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.graft.preserve-data-grouping" -> "true",
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val a = spark.table("graft_lake.spj_chars").groupBy("source")
           .agg(sum(col("n_chars")).as("sum_chars"))
         val b = spark.table("graft_lake.spj_langs").groupBy("source")
@@ -360,23 +356,18 @@ object DumpPlans {
           "At 100 TB this is the decisive shuffle elimination: co-location " +
           "replaces data movement entirely.\n\n" +
           s"```\n${j.queryExecution.executedPlan.toString.trim.take(4000)}\n```\n")
-      } finally saved.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      }
     }
 
     // Same conf-scoped treatment for the TRANSFORM flavor (p63): the
     // bucket(8, doc_id) join over the tables p63 just built.
     {
       import org.apache.spark.sql.functions.col
-      val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.sql.graft.preserve-data-grouping",
-        "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-        .map(k => k -> spark.conf.getOption(k))
-      try {
-        spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-        spark.conf.set("spark.sql.graft.preserve-data-grouping", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      GraftSession.withConf(spark)(
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.graft.preserve-data-grouping" -> "true",
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val j = spark.table("graft_lake.bspj_chars")
           .join(spark.table("graft_lake.bspj_langs"), "doc_id")
           .filter(col("n_chars") >= 0L)
@@ -388,8 +379,7 @@ object DumpPlans {
           "high-cardinality key that identity partitioning could never " +
           "co-locate (one group per value).\n\n" +
           s"```\n${j.queryExecution.executedPlan.toString.trim.take(4000)}\n```\n")
-      } finally saved.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      }
     }
     // p76: statement-level dump of the PRUNED ANN scan itself (the
     // registry frame is post-materialization). A literal probe set over
@@ -419,13 +409,10 @@ object DumpPlans {
     // the twin runs (tables p78 just built), same CBO confs as the row.
     {
       import org.apache.spark.sql.functions.{col, count, lit, sum}
-      val saved = Seq("spark.sql.cbo.enabled",
-        "spark.sql.cbo.joinReorder.enabled", "spark.sql.adaptive.enabled")
-        .map(k => k -> spark.conf.getOption(k))
-      try {
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+      GraftSession.withConf(spark)(
+        "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true",
+        "spark.sql.adaptive.enabled" -> "false") {
         Seq(
           ("_ndv", "WITH manifest NDV: the estimator sees dimA's key at " +
             "NDV=1 (a 10x fan-out) and dimB's join CONTRACTING the fact " +
@@ -446,8 +433,7 @@ object DumpPlans {
             note + "\n\n" +
             s"```\n${q.queryExecution.optimizedPlan.treeString.trim.take(3000)}\n```\n")
         }
-      } finally saved.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      }
     }
 
     // p80: the same reorder with AQE ON (the production mode) — the
@@ -456,13 +442,10 @@ object DumpPlans {
     // on top: broadcast both dims), over the tables p80 just built.
     {
       import org.apache.spark.sql.functions.{col, count, lit, sum}
-      val saved = Seq("spark.sql.cbo.enabled",
-        "spark.sql.cbo.joinReorder.enabled", "spark.sql.adaptive.enabled")
-        .map(k => k -> spark.conf.getOption(k))
-      try {
-        spark.conf.set("spark.sql.cbo.enabled", "true")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+      GraftSession.withConf(spark)(
+        "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true",
+        "spark.sql.adaptive.enabled" -> "true") {
         val q = spark.table("graft_lake.cbofact_qaqe")
           .join(spark.table("graft_lake.cbodima_qaqe"),
             col("ka") === col("ka_d"))
@@ -481,8 +464,7 @@ object DumpPlans {
           "via BroadcastHashJoin inside materialized query stages — zero " +
           "shuffles on the fact side before the partial aggregate.\n\n" +
           s"```\n${q.queryExecution.executedPlan.toString.trim.take(4000)}\n```\n")
-      } finally saved.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      }
     }
 
     Files.writeString(Paths.get(out), sb.toString)

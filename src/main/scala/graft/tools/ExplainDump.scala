@@ -16,7 +16,6 @@ object ExplainDump {
     val (dir, outDir, suffix, names) = (args(0), args(1), args(2), args.drop(3).toSeq)
     Files.createDirectories(Paths.get(outDir))
     val spark = GraftSession("explain-dump")
-    spark.sparkContext.setLogLevel("WARN")
     for (name <- names) {
       val df =
         try SparkEntry.queries(name)(spark, dir)

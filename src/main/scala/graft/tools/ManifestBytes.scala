@@ -24,11 +24,6 @@ object ManifestBytes {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val label = args.drop(1).headOption.getOrElse(dir.split('/').last)
     val spark = GraftSession("manifest-bytes")
-    spark.sparkContext.setLogLevel("WARN")
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
 
     // one PLAIN config and one EVERY-OPT-IN config (blooms + NDV on two
     // columns each + partitioning), both 8 files per append

@@ -124,10 +124,6 @@ object ScaleExtend {
     * restoreSec, replacedGroups) — the group count doubles as the
     * pruning audit at each step. */
   private def lakeProbe(spark: SparkSession, dir: String): (Double, Double, Double, Int) = {
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graft_lake.scale_probe")
     spark.sql("""CREATE TABLE graft_lake.scale_probe
                 |(doc_id BIGINT, batch BIGINT, n_chars BIGINT)
@@ -186,10 +182,6 @@ object ScaleExtend {
     * Returns (ingestSec, commitBytes, ledgerSize). */
   private def copyIntoProbe(spark: SparkSession, srcDir: String,
       nHistory: Int): (Double, Long, Int) = {
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     import graft.sources.LakeStore
     val key = "graft_lake.scale_landing"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -232,7 +224,6 @@ object ScaleExtend {
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession("scale-extend")
-    spark.sparkContext.setLogLevel("WARN")
     val src = "/root/testdata/sf0.1"
     val steps = Seq(
       "sf0.1" -> src,

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.GraftSession
-import graft.sources.{GraftLake, GraftLakeCatalog, LakeStore}
+import graft.sources.{GraftLake, LakeStore}
 
 /** Driver-resident TABLE-STATE audit for the round-15 snapshot rebuild:
   * what the warm `TableState` actually HOLDS in memory as commit
@@ -31,11 +31,6 @@ object SnapshotBytes {
   def main(args: Array[String]): Unit = {
     val ns = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(50, 100, 200)
     val spark = GraftSession("snapshot-bytes")
-    spark.sparkContext.setLogLevel("WARN")
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[GraftLakeCatalog].getName)
     import spark.implicits._
 
     // entry-size proxy: the JSON encoding a checkpoint would write for

@@ -51,22 +51,13 @@ class AsOfJoinSpec extends SparkTestBase {
 
   test("result is stable across partition counts (co-partitioning, not luck)") {
     val a = ExtendedQueries.q61AsofNative(spark, Sf0001).collect().toSeq
-    withSQLConf("spark.sql.shuffle.partitions" -> "1") {
+    GraftSession.withConf(spark)("spark.sql.shuffle.partitions" -> "1") {
       val b = ExtendedQueries.q61AsofNative(spark, Sf0001).collect().toSeq
       assert(a == b)
     }
-    withSQLConf("spark.sql.shuffle.partitions" -> "17") {
+    GraftSession.withConf(spark)("spark.sql.shuffle.partitions" -> "17") {
       val c = ExtendedQueries.q61AsofNative(spark, Sf0001).collect().toSeq
       assert(a == c)
-    }
-  }
-
-  private def withSQLConf[T](kv: (String, String)*)(f: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import graft.operators.SimilarityQueries
 import org.apache.spark.sql.functions._
 
@@ -18,7 +17,6 @@ class CosineExpressionSpec extends SparkTestBase {
   }
 
   test("scalar semantics: known vectors, nulls, ragged lengths, float input") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1, Array(1.0, 0.0), Array(0.0, 1.0)),   // orthogonal -> 0
@@ -47,7 +45,6 @@ class CosineExpressionSpec extends SparkTestBase {
   }
 
   test("perf note: native fused cosine vs HOF composition on identical pair workload") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // synthetic: 200k pairs of 64-dim vectors, same data for both paths
     val base = spark.range(200000)
@@ -76,7 +73,6 @@ class CosineExpressionSpec extends SparkTestBase {
   }
 
   test("interpreted eval matches codegen") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Array(0.3, -1.7, 2.2), Array(1.1, 0.4, -0.9))).toDF("a", "b")
     val codegen = df.selectExpr("graft_cosine(a, b) as c").collect()(0).getDouble(0)

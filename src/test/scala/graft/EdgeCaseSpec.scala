@@ -132,7 +132,6 @@ class EdgeCaseSpec extends SparkTestBase {
   }
 
   test("graft_topk rejects a non-literal or non-positive k with a clear error") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     Seq((1L, 1.0, 1L)).toDF("g", "v", "id").createOrReplaceTempView("tk_err")
     val nonLiteral = intercept[Exception] {

@@ -21,18 +21,11 @@ import graft.sources.{GraftLake, LakeStore}
   */
 class LakeStoreSpec extends SparkTestBase {
 
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
-
   private def files(key: String): Map[List[Any], Seq[String]] =
     LakeStore.get(key).get.current.groupBy(_.group)
       .map { case (g, fs) => g -> fs.map(_.path).sorted.toSeq }
 
   test("partition-scoped MERGE touches only the touched groups' FILES") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.fcow")
     spark.sql(
       "CREATE TABLE graft_lake.fcow (id BIGINT, src STRING, v BIGINT) PARTITIONED BY (src)")
@@ -67,7 +60,6 @@ class LakeStoreSpec extends SparkTestBase {
   }
 
   test("the commit log is the source of truth: cold replay == warm cache") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.replay")
     spark.sql(
       "CREATE TABLE graft_lake.replay (id BIGINT, src STRING, v DOUBLE) PARTITIONED BY (src)")
@@ -102,7 +94,6 @@ class LakeStoreSpec extends SparkTestBase {
   }
 
   test("INSERT OVERWRITE through the truncate capability swaps the whole table") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.ow")
     spark.sql("CREATE TABLE graft_lake.ow (id BIGINT, v BIGINT)")
     import spark.implicits._
@@ -115,7 +106,6 @@ class LakeStoreSpec extends SparkTestBase {
   }
 
   test("zone maps skip FILES from manifest statistics (never opening data)") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.zf")
     spark.sql("CREATE TABLE graft_lake.zf (id BIGINT, v BIGINT)")
     import spark.implicits._
@@ -137,7 +127,6 @@ class LakeStoreSpec extends SparkTestBase {
   }
 
   test("delete-everything MERGE/DELETE leaves an empty live set but keeps history") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.purge")
     spark.sql("CREATE TABLE graft_lake.purge (id BIGINT)")
     import spark.implicits._
@@ -150,7 +139,6 @@ class LakeStoreSpec extends SparkTestBase {
   }
 
   test("concurrent appends serialize into distinct versions with no lost update") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.conc")
     spark.sql("CREATE TABLE graft_lake.conc (id BIGINT)")
     import spark.implicits._
@@ -174,7 +162,6 @@ class LakeStoreSpec extends SparkTestBase {
   }
 
   test("a log-entry rename collision fails the commit loudly (cross-process guard)") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.race")
     spark.sql("CREATE TABLE graft_lake.race (id BIGINT)")
     import spark.implicits._
@@ -190,7 +177,6 @@ class LakeStoreSpec extends SparkTestBase {
   }
 
   test("data files land under the table's data/ dir; log is one JSON per commit") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.layout")
     spark.sql("CREATE TABLE graft_lake.layout (id BIGINT)")
     import spark.implicits._

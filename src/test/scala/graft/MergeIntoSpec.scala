@@ -9,14 +9,7 @@ import org.apache.spark.sql.functions._
   */
 class MergeIntoSpec extends SparkTestBase {
 
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
-
   test("lake catalog round-trips create + append + scan") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.rt")
     spark.sql("CREATE TABLE graft_lake.rt (id BIGINT, name STRING, score DOUBLE)")
     import spark.implicits._
@@ -28,7 +21,6 @@ class MergeIntoSpec extends SparkTestBase {
   }
 
   test("MERGE INTO applies all four action kinds") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.m4")
     spark.sql("CREATE TABLE graft_lake.m4 (id BIGINT, v BIGINT, stale BIGINT)")
     import spark.implicits._
@@ -89,7 +81,6 @@ class MergeIntoSpec extends SparkTestBase {
   }
 
   test("UPDATE and DELETE plan through the same row-level rewrite and version the snapshots") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.ud")
     spark.sql("CREATE TABLE graft_lake.ud (id BIGINT, v BIGINT)")
     import spark.implicits._
@@ -113,7 +104,6 @@ class MergeIntoSpec extends SparkTestBase {
   }
 
   test("partitioned table: MERGE rewrites only the touched partitions (runtime group filtering)") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.pt")
     spark.sql(
       "CREATE TABLE graft_lake.pt (id BIGINT, src STRING, v BIGINT) PARTITIONED BY (src)")
@@ -155,7 +145,6 @@ class MergeIntoSpec extends SparkTestBase {
   }
 
   test("p47: a MERGE spanning both partition specs migrates the old cohort, pruning intact") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.evomerge")
     spark.sql("CREATE TABLE graft_lake.evomerge (id BIGINT, grp STRING, v BIGINT)")
     import spark.implicits._
@@ -203,7 +192,6 @@ class MergeIntoSpec extends SparkTestBase {
   }
 
   test("the MERGE plans through Catalyst's row-level rewrite (MergeRows + ReplaceData)") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.px")
     spark.sql("CREATE TABLE graft_lake.px (id BIGINT, v BIGINT)")
     import spark.implicits._

@@ -89,17 +89,11 @@ class PlanShapeSpec extends SparkTestBase {
     // salting (q32) handles statically; here AQE must detect and split the
     // hot partition without any query rewrite. Thresholds are lowered so
     // the test corpus trips the same detector a hot key trips at TB scale.
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      .map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "65536")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32768")
-    try {
+    GraftSession.withConf(spark)(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "65536",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32768") {
       val left = spark.range(200000).select(
         when($"id" < 180000, lit(0L)).otherwise($"id" % 97).as("k"),
         lpad($"id".cast("string"), 100, "x").as("pad"))
@@ -110,9 +104,6 @@ class PlanShapeSpec extends SparkTestBase {
       assert(j.collect().length === 200000)
       val p = plan(j)
       assert(p.contains("skew=true"), s"expected AQE skew split in:\n$p")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -184,22 +175,21 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("LevenshteinGuard rule derives the length guard and preserves results") {
+    val target = lit("steel plate")
     def q = Tables.part(spark, Sf0001)
-      .filter(levenshtein(col("p_name"), lit("steel plate")) <= 3)
+      .filter(levenshtein(col("p_name"), target) <= 3)
       .select(col("p_partkey"))
-    // baseline BEFORE the rule is registered on this shared session
-    val before = q.collect().map(_.getLong(0)).sorted
-    val planBefore = q.queryExecution.optimizedPlan.toString
-    assert(!planBefore.contains("abs("), "guard must not pre-exist")
-    graft.plans.LevenshteinGuard.ensureRegistered(spark)
-    val planAfter = q.queryExecution.optimizedPlan.toString
-    assert(planAfter.contains("abs(") && planAfter.contains("length("),
-      s"derived length guard missing:\n$planAfter")
-    // the guard is a NECESSARY condition: result set identical
-    assert(q.collect().map(_.getLong(0)).sorted === before)
-    // fixed-point safety: registering twice must not stack guards
-    graft.plans.LevenshteinGuard.ensureRegistered(spark)
-    val occurrences = "abs\\(".r.findAllIn(q.queryExecution.optimizedPlan.toString).size
-    assert(occurrences === 1, "guard added more than once")
+    // the rule ships with every GraftSession (GraftExtensions): no install
+    val plan = q.queryExecution.optimizedPlan.toString
+    assert(plan.contains("abs(") && plan.contains("length("),
+      s"derived length guard missing:\n$plan")
+    // fixed-point safety: the optimizer batch must not stack guards
+    assert("abs\\(".r.findAllIn(plan).size === 1, "guard added more than once")
+    // the guard is a NECESSARY condition: result set identical to the
+    // unguarded distance (a projection, which the rule does not rewrite)
+    val unguarded = Tables.part(spark, Sf0001)
+      .select(col("p_partkey"), levenshtein(col("p_name"), target).as("d"))
+      .collect().filter(_.getInt(1) <= 3).map(_.getLong(0)).sorted
+    assert(q.collect().map(_.getLong(0)).sorted === unguarded)
   }
 }

@@ -13,16 +13,9 @@ import graft.sources.{GraftLake, LakeStore}
   * streaming retention gate. */
 class Round10OpsSpec extends SparkTestBase {
 
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
-
   // --------------------------------------------- CREATE vs cold tables
 
   test("CREATE TABLE refuses to clobber a table that exists only on disk (cold log)") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.coldc")
     spark.sql("CREATE TABLE graft_lake.coldc (id BIGINT)")
     import spark.implicits._
@@ -41,7 +34,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------------- datetime + decimal manifests
 
   test("DATE/TIMESTAMP zones round-trip a cold log replay and still skip files") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.dtz")
     spark.sql("CREATE TABLE graft_lake.dtz (id BIGINT, d DATE, ts TIMESTAMP)")
     spark.sql("""INSERT INTO graft_lake.dtz
@@ -60,7 +52,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("DECIMAL columns commit without zones (superset-safe) and survive cold replay") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.decz")
     spark.sql("CREATE TABLE graft_lake.decz (id BIGINT, amt DECIMAL(10,2))")
     spark.sql("INSERT INTO graft_lake.decz SELECT 1L, CAST(12.34 AS DECIMAL(10,2))")
@@ -79,7 +70,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------------ change feed across an ALTER
 
   test("changes() spans an ALTER TABLE ADD COLUMN boundary") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.evch")
     spark.sql("CREATE TABLE graft_lake.evch (id BIGINT, v BIGINT)")
     import spark.implicits._
@@ -99,7 +89,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------- p45 defaults / generated / identity
 
   test("p45/column DEFAULTs fill omitted columns on INSERT; generated columns compute and validate") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.gen1")
     spark.sql("""CREATE TABLE graft_lake.gen1 (
                 |  id BIGINT,
@@ -133,7 +122,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("p45/identity columns assign unique stepped values and reject explicit inserts") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.idt")
     spark.sql("""CREATE TABLE graft_lake.idt (
                 |  row_id BIGINT GENERATED ALWAYS AS IDENTITY (START WITH 1000 INCREMENT BY 2),
@@ -167,7 +155,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("p45/UPDATE recomputes generated columns and preserves identity values (COW + MoR)") {
-    registerCatalog()
     def arc(table: String, mor: Boolean): Unit = {
       spark.sql(s"DROP TABLE IF EXISTS graft_lake.$table")
       spark.sql(s"""CREATE TABLE graft_lake.$table (
@@ -208,7 +195,6 @@ class Round10OpsSpec extends SparkTestBase {
   // --------------------------------------------------- p46 z-order
 
   test("p46/z-order tiles scan fewer files than 1-D clustering for a 2-D box") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.grid")
     spark.sql("CREATE TABLE graft_lake.grid (x BIGINT, y BIGINT)")
     import spark.implicits._
@@ -237,7 +223,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ----------------------------------------------------- p48 blooms
 
   test("p48/bloom filters skip equality probes zones cannot, survive cold replay") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.blm")
     spark.sql("""CREATE TABLE graft_lake.blm (id BIGINT, v BIGINT)
                 |TBLPROPERTIES ('graft.bloom.columns' = 'id')""".stripMargin)
@@ -282,7 +267,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("change feed nets copy-on-write carry-over to exactly the batch diff") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.cowfeed")
     spark.sql("""CREATE TABLE graft_lake.cowfeed
                 |(id BIGINT, grp BIGINT, v BIGINT) PARTITIONED BY (grp)""".stripMargin)
@@ -314,7 +298,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("batch changes table honors startingVersion/endingVersion and the vacuum gate") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.chrange")
     spark.sql("CREATE TABLE graft_lake.chrange (id BIGINT)")
     import spark.implicits._
@@ -338,7 +321,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("CDF stream checkpoint delivers each commit exactly once across runs") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.cdfresume")
     spark.sql("""CREATE TABLE graft_lake.cdfresume (id BIGINT, v BIGINT)
                 |TBLPROPERTIES ('graft.merge-on-read' = 'true')""".stripMargin)
@@ -370,7 +352,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------ p49 overwrite modes / st17 sink
 
   test("p49/SQL INSERT OVERWRITE PARTITION swaps exactly the named partition") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.povr2")
     spark.sql("CREATE TABLE graft_lake.povr2 (id BIGINT, grp STRING) PARTITIONED BY (grp)")
     import spark.implicits._
@@ -392,7 +373,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("st17/a committed epoch replay is recognized and dropped (exactly-once)") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.epochx")
     spark.sql("CREATE TABLE graft_lake.epochx (id BIGINT)")
     def entry(p: String) = LakeStore.FileEntry(p, Nil, 1L, Seq("id"),
@@ -413,7 +393,6 @@ class Round10OpsSpec extends SparkTestBase {
   // --------------------------------------- partitions metadata table
 
   test("<table>.partitions reports the live group footprint incl. deletion vectors") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.pmeta")
     spark.sql("""CREATE TABLE graft_lake.pmeta (id BIGINT, grp STRING, v BIGINT)
                 |PARTITIONED BY (grp)
@@ -435,7 +414,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------------------- p51 column mapping
 
   test("p51/RENAME COLUMN: physical names stable, guarded renames refused, cold replay exact") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.ren2")
     spark.sql("""CREATE TABLE graft_lake.ren2 (id BIGINT, grp STRING, v BIGINT)
                 |PARTITIONED BY (grp)""".stripMargin)
@@ -473,7 +451,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("changes() spans a RENAME COLUMN boundary without phantom updates") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.rendiff")
     spark.sql("CREATE TABLE graft_lake.rendiff (id BIGINT, v BIGINT)")
     import spark.implicits._
@@ -492,7 +469,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ---------------------------------------------- TIMESTAMP AS OF
 
   test("TIMESTAMP AS OF resolves against the commit log's own clock") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.tsx")
     val t0 = System.currentTimeMillis()
     spark.sql("CREATE TABLE graft_lake.tsx (id BIGINT)")
@@ -526,7 +502,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------------------------ p50 procedures
 
   test("p50/CALL procedures: clone + set_partition_spec + listing + unknown-name error") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.proc_clone")
     spark.sql("DROP TABLE IF EXISTS graft_lake.proc_src")
     spark.sql("CREATE TABLE graft_lake.proc_src (id BIGINT, grp STRING)")
@@ -564,7 +539,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ---------------------------------- MoR update-representation toggle
 
   test("update-as-delete+insert toggle lands identically to single-op updates") {
-    registerCatalog()
     def run(table: String, toggle: Boolean): (Seq[(Long, Long)], Long) = {
       spark.sql(s"DROP TABLE IF EXISTS graft_lake.$table")
       val props = "'graft.merge-on-read' = 'true'" +
@@ -589,7 +563,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------------------ streaming retention gate
 
   test("a stream resuming below the VACUUM horizon fails with the retention message") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.stvac")
     spark.sql("CREATE TABLE graft_lake.stvac (id BIGINT)")
     import spark.implicits._
@@ -615,7 +588,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------------------- p52 drop column
 
   test("p52/DROP COLUMN: metadata-only, re-ADD reads null, guards, cold replay") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.drp2")
     spark.sql("""CREATE TABLE graft_lake.drp2 (id BIGINT, grp STRING, v BIGINT)
                 |PARTITIONED BY (grp)""".stripMargin)
@@ -657,7 +629,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("ADD COLUMN colliding with a renamed column's birth name gets a fresh physical name") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.radd")
     spark.sql("CREATE TABLE graft_lake.radd (id BIGINT, v BIGINT)")
     import spark.implicits._
@@ -676,7 +647,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------------------- p53 log checkpoints
 
   test("p53/log checkpoint bounds cold replay, keeps fidelity, and is never load-bearing") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.ck2")
     spark.sql("""CREATE TABLE graft_lake.ck2 (id BIGINT, grp STRING)
                 |PARTITIONED BY (grp)
@@ -706,7 +676,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("a newer checkpoint garbage-collects the superseded one") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.ckgc")
     spark.sql("CREATE TABLE graft_lake.ckgc (id BIGINT)")
     import spark.implicits._
@@ -723,7 +692,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("checkpointed replay preserves partition-evolution eras and column mapping") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.ck3")
     spark.sql("""CREATE TABLE graft_lake.ck3 (id BIGINT, grp STRING, day BIGINT)
                 |PARTITIONED BY (grp)""".stripMargin)
@@ -754,7 +722,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------- change feed through a shallow clone
 
   test("a shallow CLONE serves its own change feed (absolute refs, source DVs)") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.cdfsrc")
     spark.sql("DROP TABLE IF EXISTS graft_lake.cdfclone")
     spark.sql("""CREATE TABLE graft_lake.cdfsrc (id BIGINT, v BIGINT)
@@ -781,7 +748,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------- storage-partitioned join (SPJ)
 
   test("p54/SPJ: identically-partitioned lake tables join with zero exchanges") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.spja")
     spark.sql("DROP TABLE IF EXISTS graft_lake.spjb")
     spark.sql("""CREATE TABLE graft_lake.spja (id BIGINT, grp STRING, v BIGINT)
@@ -793,15 +759,11 @@ class Round10OpsSpec extends SparkTestBase {
       .writeTo("graft_lake.spja").append()
     (0L until 30L).map(i => (i, s"g${i % 3}", i * 2)).toDF("id", "grp", "w")
       .writeTo("graft_lake.spjb").append()
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.graft.preserve-data-grouping",
-      "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.graft.preserve-data-grouping", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(spark)(
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.graft.preserve-data-grouping" -> "true",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val a = spark.table("graft_lake.spja").groupBy("grp")
         .agg(sum(col("v")).as("sv"))
       val b = spark.table("graft_lake.spjb").groupBy("grp")
@@ -826,21 +788,20 @@ class Round10OpsSpec extends SparkTestBase {
       assert(joinTreeExchanges.nonEmpty && joinTreeExchanges.forall(_ === 0),
         s"join subtree has exchanges (total in plan: $exchanges)")
       // and with the conf OFF, the same plan shuffles — the gate works
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-      val off = spark.table("graft_lake.spja").groupBy("grp").agg(sum(col("v")))
-        .join(spark.table("graft_lake.spjb").groupBy("grp").agg(sum(col("w"))), "grp")
-      val offExchanges = off.queryExecution.executedPlan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
-      }.length
-      assert(offExchanges > 0)
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      GraftSession.withConf(spark)("spark.sql.sources.v2.bucketing.enabled" -> "false") {
+        val off = spark.table("graft_lake.spja").groupBy("grp").agg(sum(col("v")))
+          .join(spark.table("graft_lake.spjb").groupBy("grp").agg(sum(col("w"))), "grp")
+        val offExchanges = off.queryExecution.executedPlan.collect {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
+        }.length
+        assert(offExchanges > 0)
+      }
+    }
   }
 
   // ------------------------------------ p57 hidden partitioning
 
   test("p57/hidden partitioning: days(ts)+bucket(4,uid) derive groups, prune, and guard") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.hpart")
     spark.sql("""CREATE TABLE graft_lake.hpart (ev BIGINT, uid BIGINT, ts TIMESTAMP)
                 |PARTITIONED BY (days(ts), bucket(4, uid))""".stripMargin)
@@ -902,7 +863,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------------ column statistics
 
   test("scan statistics report zone-envelope column min/max after pushdown") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.cstat")
     spark.sql("CREATE TABLE graft_lake.cstat (id BIGINT, grp STRING, v BIGINT)")
     import spark.implicits._
@@ -940,7 +900,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------------ TRUNCATE TABLE
 
   test("TRUNCATE TABLE is one history-preserving commit; CDC sees the deletes") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.trnc")
     spark.sql("CREATE TABLE graft_lake.trnc (id BIGINT, v BIGINT)")
     import spark.implicits._
@@ -965,7 +924,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------------ p56 type widening
 
   test("p56/ALTER COLUMN TYPE widens losslessly: old narrow files read as the wide type") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.wide")
     spark.sql("""CREATE TABLE graft_lake.wide (id BIGINT, n INT, f FLOAT)
                 |TBLPROPERTIES ('graft.bloom.columns' = 'n')""".stripMargin)
@@ -1000,7 +958,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------- staged CREATE / REPLACE (p55)
 
   test("p55/CREATE OR REPLACE TABLE: one atomic history-preserving commit, self-referencing") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.rep")
     spark.sql("CREATE TABLE graft_lake.rep (id BIGINT, v BIGINT)")
     import spark.implicits._
@@ -1033,7 +990,6 @@ class Round10OpsSpec extends SparkTestBase {
   }
 
   test("p55/a failing staged REPLACE leaves the table untouched (atomicity)") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.rep2")
     spark.sql("CREATE TABLE graft_lake.rep2 (id BIGINT)")
     import spark.implicits._
@@ -1060,7 +1016,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------- st18 incremental CDC replication
 
   test("st18/CDC replication resumes from its checkpoint and applies only new commits") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.crsrc")
     spark.sql("DROP TABLE IF EXISTS graft_lake.crdst")
     spark.sql("""CREATE TABLE graft_lake.crsrc (id BIGINT, v BIGINT)
@@ -1120,7 +1075,6 @@ class Round10OpsSpec extends SparkTestBase {
   // ------------------------------- streaming sink onto MoR state
 
   test("the streaming sink appends cleanly onto live merge-on-read state") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.smor")
     spark.sql("DROP TABLE IF EXISTS graft_lake.smorsrc")
     spark.sql("""CREATE TABLE graft_lake.smor (id BIGINT, v BIGINT)

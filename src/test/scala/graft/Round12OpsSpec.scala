@@ -16,19 +16,12 @@ import graft.sources.{GraftLake, LakeStore}
   * outside the overwrite filter abort the commit, the Delta contract). */
 class Round12OpsSpec extends SparkTestBase {
 
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
-
   private def causes(t: Throwable): Seq[Throwable] =
     if (t == null) Nil else t +: causes(t.getCause)
 
   // ----------------- r11 fix #1: identity high-water across a RENAME
 
   test("identity high-water mark survives RENAME COLUMN (no duplicate ids)") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.idren")
     spark.sql("""CREATE TABLE graft_lake.idren (
                 |  row_id BIGINT GENERATED ALWAYS AS IDENTITY (START WITH 1 INCREMENT BY 1),
@@ -55,7 +48,6 @@ class Round12OpsSpec extends SparkTestBase {
   // ----------------- r11 fix #2: multi-column ZORDER after a RENAME
 
   test("OPTIMIZE ZORDER BY renamed columns succeeds and still prunes") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.zren")
     spark.sql("CREATE TABLE graft_lake.zren (x BIGINT, y BIGINT)")
     import spark.implicits._
@@ -80,7 +72,6 @@ class Round12OpsSpec extends SparkTestBase {
   // ----------------- r11 fix #3: null-safe equality vs a NULL literal
 
   test("col <=> NULL on a bloom-indexed column keeps every file and returns the null rows") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.nseq")
     spark.sql("""CREATE TABLE graft_lake.nseq (id BIGINT, tag STRING)
                 |TBLPROPERTIES ('graft.bloom.columns' = 'tag')""".stripMargin)
@@ -109,7 +100,6 @@ class Round12OpsSpec extends SparkTestBase {
   // ----------------- SPJ spec-era gate (same-arity partition evolution)
 
   test("SPJ refuses same-arity pre-evolution files: conf ON equals conf OFF") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.eraa")
     spark.sql("DROP TABLE IF EXISTS graft_lake.erab")
     spark.sql("""CREATE TABLE graft_lake.eraa (id BIGINT, src STRING, lang STRING, v BIGINT)
@@ -128,43 +118,39 @@ class Round12OpsSpec extends SparkTestBase {
     GraftLake.setPartitionSpec("graft_lake.eraa", Seq("lang"))
     val st = LakeStore.get("graft_lake.eraa").get
     assert(st.specEra === 1 && st.current.forall(_.era === 0))
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.graft.preserve-data-grouping",
-      "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(spark)(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       def run(): Seq[(Long, Long)] =
         spark.table("graft_lake.eraa").select("id", "lang")
           .join(spark.table("graft_lake.erab"), "lang")
           .select("id", "w").collect().map(r => (r.getLong(0), r.getLong(1)))
           .sorted.toSeq
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-      val off = run()
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.graft.preserve-data-grouping", "true")
-      val on = run()
-      assert(off === (0L until 20L).map(i => (i, 100L)))
-      assert(on === off, "SPJ across a same-arity partition evolution " +
-        "returned different results than the shuffled plan")
-      // post-evolution appends migrate nothing: the gate stays shut
-      // until every live file is current-era — then SPJ re-arms
-      spark.sql("DELETE FROM graft_lake.eraa WHERE id >= 0") // migrates: COW rewrite
-      (0L until 20L).map(i => (i, "s", "x", i))
-        .toDF("id", "src", "lang", "v").writeTo("graft_lake.eraa").append()
-      val st2 = LakeStore.get("graft_lake.eraa").get
-      assert(st2.current.forall(_.era === 1))
-      val on2 = run()
-      assert(on2 === (0L until 20L).map(i => (i, 100L)))
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      val off = GraftSession.withConf(spark)(
+        "spark.sql.sources.v2.bucketing.enabled" -> "false")(run())
+      GraftSession.withConf(spark)(
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.graft.preserve-data-grouping" -> "true") {
+        val on = run()
+        assert(off === (0L until 20L).map(i => (i, 100L)))
+        assert(on === off, "SPJ across a same-arity partition evolution " +
+          "returned different results than the shuffled plan")
+        // post-evolution appends migrate nothing: the gate stays shut
+        // until every live file is current-era — then SPJ re-arms
+        spark.sql("DELETE FROM graft_lake.eraa WHERE id >= 0") // migrates: COW rewrite
+        (0L until 20L).map(i => (i, "s", "x", i))
+          .toDF("id", "src", "lang", "v").writeTo("graft_lake.eraa").append()
+        val st2 = LakeStore.get("graft_lake.eraa").get
+        assert(st2.current.forall(_.era === 1))
+        val on2 = run()
+        assert(on2 === (0L until 20L).map(i => (i, 100L)))
+      }
+    }
   }
 
   // ----------------- replaceWhere data validation
 
   test("replaceWhere refuses written rows outside the overwrite filter") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.rwval")
     spark.sql("""CREATE TABLE graft_lake.rwval (id BIGINT, grp STRING, v BIGINT)
                 |PARTITIONED BY (grp)""".stripMargin)
@@ -203,7 +189,6 @@ class Round12OpsSpec extends SparkTestBase {
   // ----------------- spec-era bookkeeping survives replay
 
   test("file spec eras and the era counter survive cold replay and RESTORE") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.eras")
     spark.sql("""CREATE TABLE graft_lake.eras (id BIGINT, a STRING, b STRING)
                 |PARTITIONED BY (a)""".stripMargin)
@@ -230,7 +215,6 @@ class Round12OpsSpec extends SparkTestBase {
   // ----------------- hidden-partitioning transform roster (p57 extension)
 
   test("hours/months/years/truncate transforms derive keys, prune on source columns, and guard") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.hp2")
     spark.sql("""CREATE TABLE graft_lake.hp2 (ev BIGINT, name STRING, ts TIMESTAMP)
                 |PARTITIONED BY (months(ts), truncate(4, name))""".stripMargin)
@@ -357,7 +341,6 @@ class Round12OpsSpec extends SparkTestBase {
 
   private def occTable(name: String, partitioned: Boolean = true,
       props: String = ""): String = {
-    registerCatalog()
     val key = s"graft_lake.$name"
     spark.sql(s"DROP TABLE IF EXISTS $key")
     spark.sql(s"CREATE TABLE $key (id BIGINT, grp STRING, v BIGINT)" +
@@ -439,10 +422,8 @@ class Round12OpsSpec extends SparkTestBase {
 
   // ----------------- p59 branches / tags / write-audit-publish
 
-  private def onBranch[T](name: String)(body: => T): T = {
-    spark.conf.set("graft.lake.branch", name)
-    try body finally spark.conf.unset("graft.lake.branch")
-  }
+  private def onBranch[T](name: String)(body: => T): T =
+    GraftSession.withConf(spark)("graft.lake.branch" -> name)(body)
 
   test("p59/branch writes are invisible to main until fast-forward publish") {
     val key = occTable("wap_iso")
@@ -601,7 +582,6 @@ class Round12OpsSpec extends SparkTestBase {
   // ----------------- p61 row lineage
 
   test("p61/OPTIMIZE carries identity row ids instead of refusing them") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.rowids")
     spark.sql("""CREATE TABLE graft_lake.rowids (
                 |  row_id BIGINT GENERATED ALWAYS AS IDENTITY,
@@ -631,7 +611,6 @@ class Round12OpsSpec extends SparkTestBase {
   // ----------------- p63/p64 function catalog + SPJ over transforms
 
   test("p63/partition-transform functions are SQL-callable and agree with the writer's routing") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.fnaudit")
     spark.sql("""CREATE TABLE graft_lake.fnaudit (id BIGINT, name STRING, ts TIMESTAMP)
                 |PARTITIONED BY (bucket(4, name), days(ts))""".stripMargin)
@@ -673,7 +652,6 @@ class Round12OpsSpec extends SparkTestBase {
   }
 
   test("p63/SPJ over a bucket transform joins exchange-free; same-arity bucket evolution disarms it") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.bspja")
     spark.sql("DROP TABLE IF EXISTS graft_lake.bspjb")
     spark.sql("""CREATE TABLE graft_lake.bspja (id BIGINT, v BIGINT)
@@ -683,35 +661,34 @@ class Round12OpsSpec extends SparkTestBase {
     import spark.implicits._
     (0L until 64L).map(i => (i, i)).toDF("id", "v").writeTo("graft_lake.bspja").append()
     (0L until 64L).map(i => (i, i * 10)).toDF("id", "w").writeTo("graft_lake.bspjb").append()
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.graft.preserve-data-grouping",
-      "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(spark)(
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       def plan() = spark.table("graft_lake.bspja")
         .join(spark.table("graft_lake.bspjb"), "id")
       def exchanges() = plan().queryExecution.executedPlan.collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
       }.length
       def sums() = plan().agg(sum("v"), sum("w")).collect()(0)
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "false")
-      val off = sums(); assert(exchanges() > 0)
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.graft.preserve-data-grouping", "true")
-      assert(exchanges() === 0,
-        "bucket-transform SPJ left a shuffle in the join")
-      assert(sums() === off)
-      // SAME-ARITY transform evolution bucket(4) -> bucket(8): old files'
-      // keys are 0..3-valued and SHAPE-compatible with the new spec, but
-      // mean different buckets — the era gate must disarm SPJ
-      GraftLake.setPartitionSpec("graft_lake.bspja", Seq("bucket(8, id)"))
-      assert(exchanges() > 0,
-        "SPJ stayed armed across a same-arity bucket evolution")
-      assert(sums() === off)
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      val off = GraftSession.withConf(spark)(
+          "spark.sql.sources.v2.bucketing.enabled" -> "false") {
+        val s = sums(); assert(exchanges() > 0); s
+      }
+      GraftSession.withConf(spark)(
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.graft.preserve-data-grouping" -> "true") {
+        assert(exchanges() === 0,
+          "bucket-transform SPJ left a shuffle in the join")
+        assert(sums() === off)
+        // SAME-ARITY transform evolution bucket(4) -> bucket(8): old files'
+        // keys are 0..3-valued and SHAPE-compatible with the new spec, but
+        // mean different buckets — the era gate must disarm SPJ
+        GraftLake.setPartitionSpec("graft_lake.bspja", Seq("bucket(8, id)"))
+        assert(exchanges() > 0,
+          "SPJ stayed armed across a same-arity bucket evolution")
+        assert(sums() === off)
+      }
+    }
   }
 
   // ----------------- p67 manifest file sizes + DESCRIBE DETAIL
@@ -775,7 +752,6 @@ class Round12OpsSpec extends SparkTestBase {
   // ----------------- p69 runtime partition filtering (DPP on plain reads)
 
   test("p69/dynamic partition pruning: dim-side filter prunes fact groups at runtime") {
-    registerCatalog()
     val key = "graft_lake.dppf"
     spark.sql(s"DROP TABLE IF EXISTS $key")
     spark.sql(s"""CREATE TABLE $key (id BIGINT, grp STRING, v BIGINT)
@@ -830,12 +806,9 @@ class Round12OpsSpec extends SparkTestBase {
     // filtering: Spark verifies the promised group ROSTER is unchanged
     // after filter(), so pruned groups keep their keyed partitions but
     // carry zero files — same answer, 3/10 groups' files opened
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.graft.preserve-data-grouping")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.graft.preserve-data-grouping", "true")
+    GraftSession.withConf(spark)(
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.graft.preserve-data-grouping" -> "true") {
       val js = spark.table(key)
         .join(dim.hint("broadcast"), col("grp") === col("dgrp"))
         .agg(sum(col("v")).as("s"), count(lit(1)).as("n"))
@@ -843,8 +816,7 @@ class Round12OpsSpec extends SparkTestBase {
       val ss = LakeStore.lastScanStats(key)
       assert(ss.groupsTotal === 10 && ss.groupsScanned === 3 &&
         ss.filesScanned === 3, s"SPJ+DPP compose: $ss")
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   // ----------------- p68 aggregate pushdown (manifest-only COUNT/MIN/MAX)
@@ -929,7 +901,6 @@ class Round12OpsSpec extends SparkTestBase {
   }
 
   test("p68/all-null files prove themselves via null counts; time travel pins the snapshot") {
-    registerCatalog()
     val key = "graft_lake.agg4"
     spark.sql(s"DROP TABLE IF EXISTS $key")
     spark.sql(s"CREATE TABLE $key (id BIGINT, v BIGINT)")
@@ -959,7 +930,6 @@ class Round12OpsSpec extends SparkTestBase {
   // ----------------- p66 compatible bucket counts + one-side shuffle
 
   test("p66/bucket(16) joins bucket(8) exchange-free; non-divisible counts fall back; one-side shuffle") {
-    registerCatalog()
     Seq("cba" -> 16, "cbb" -> 8, "cbc" -> 6).foreach { case (t, n) =>
       spark.sql(s"DROP TABLE IF EXISTS graft_lake.$t")
       spark.sql(s"""CREATE TABLE graft_lake.$t (id BIGINT, v BIGINT)
@@ -971,21 +941,14 @@ class Round12OpsSpec extends SparkTestBase {
     import spark.implicits._
     (0L until 128L).map(i => (i, i)).toDF("id", "w")
       .createOrReplaceTempView("p66t_plain")
-    val saved = Seq("spark.sql.sources.v2.bucketing.enabled",
-      "spark.sql.graft.preserve-data-grouping",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
-      "spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled",
-      "spark.sql.sources.v2.bucketing.shuffle.enabled",
-      "spark.sql.adaptive.enabled", "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark.conf.getOption(k))
-    try {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-      spark.conf.set("spark.sql.graft.preserve-data-grouping", "true")
-      spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      spark.conf.set("spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled", "true")
-      spark.conf.set("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(spark)(
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.graft.preserve-data-grouping" -> "true",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       def exchanges(j: org.apache.spark.sql.DataFrame): Int =
         j.queryExecution.executedPlan.collect {
           case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
@@ -1011,14 +974,12 @@ class Round12OpsSpec extends SparkTestBase {
       assert(exchanges(oneSide) === 1,
         s"one-side shuffle expected exactly 1 exchange, got ${exchanges(oneSide)}")
       check(oneSide, (0L until 128L).sum)
-    } finally saved.foreach { case (k, vOpt) =>
-      vOpt.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
   }
 
   // ----------------- p65 write distribution & ordering
 
   test("p65/write distribution: hash clusters by partition key, range sorts, none stays put") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.wdm")
     spark.sql("""CREATE TABLE graft_lake.wdm (id BIGINT, grp STRING, v BIGINT)
                 |PARTITIONED BY (grp)""".stripMargin)

@@ -34,12 +34,6 @@ import graft.sources.{GraftLake, LakeStore}
   * here (7 succeeded, 3 failed), so each test pins its own fix. */
 class Round13OpsSpec extends SparkTestBase {
 
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
-
   private def causes(t: Throwable): Seq[Throwable] =
     if (t == null) Nil else t +: causes(t.getCause)
 
@@ -47,7 +41,6 @@ class Round13OpsSpec extends SparkTestBase {
     causes(e).exists(_.isInstanceOf[LakeStore.CommitConflictException])
 
   private def freshTable(name: String, props: String = ""): String = {
-    registerCatalog()
     val key = s"graft_lake.$name"
     spark.sql(s"DROP TABLE IF EXISTS $key")
     spark.sql(s"CREATE TABLE $key (id BIGINT, grp STRING, v BIGINT)" +
@@ -84,10 +77,8 @@ class Round13OpsSpec extends SparkTestBase {
 
   // ----------------- ADVICE 2: CDF equality-delete effects at PUBLISH
 
-  private def onBranch[T](name: String)(body: => T): T = {
-    spark.conf.set("graft.lake.branch", name)
-    try body finally spark.conf.unset("graft.lake.branch")
-  }
+  private def onBranch[T](name: String)(body: => T): T =
+    GraftSession.withConf(spark)("graft.lake.branch" -> name)(body)
 
   test("publish delivers branch upserts as exact row-level I and D") {
     val key = freshTable("wapup")
@@ -150,7 +141,6 @@ class Round13OpsSpec extends SparkTestBase {
   // ----------------- ADVICE 3: MIN/MAX pushdown across type widening
 
   test("manifest MIN/MAX coerces pre-widening Integer zones to the current type") {
-    registerCatalog()
     import spark.implicits._
     spark.sql("DROP TABLE IF EXISTS graft_lake.widagg")
     spark.sql("CREATE TABLE graft_lake.widagg (n INT)")
@@ -229,7 +219,6 @@ class Round13OpsSpec extends SparkTestBase {
   // ----------------- runtime filtering composes with merge-on-read
 
   test("DPP prunes fact groups on a MoR table with live DVs and equality deletes") {
-    registerCatalog()
     val key = "graft_lake.dppmor"
     spark.sql(s"DROP TABLE IF EXISTS $key")
     spark.sql(s"""CREATE TABLE $key (id BIGINT, grp STRING, v BIGINT)
@@ -272,7 +261,6 @@ class Round13OpsSpec extends SparkTestBase {
   // ----------------- size-aware incremental compaction (p71)
 
   test("compact rewrites only groups with enough under-threshold files") {
-    registerCatalog()
     val key = "graft_lake.cmp"
     spark.sql(s"DROP TABLE IF EXISTS $key")
     spark.sql(s"""CREATE TABLE $key (id BIGINT, grp STRING, v BIGINT)
@@ -323,7 +311,6 @@ class Round13OpsSpec extends SparkTestBase {
   // ----------------- streaming rate limiting (st19)
 
   test("maxFilesPerTrigger batches per-commit; an oversized commit still admits") {
-    registerCatalog()
     val key = "graft_lake.rl"
     spark.sql(s"DROP TABLE IF EXISTS $key")
     spark.sql(s"CREATE TABLE $key (id BIGINT, v BIGINT)")
@@ -377,7 +364,6 @@ class Round13OpsSpec extends SparkTestBase {
   }
 
   test("startingVersion=latest tails instead of replaying; numeric starts mid-log") {
-    registerCatalog()
     val key = "graft_lake.rlsv"
     spark.sql(s"DROP TABLE IF EXISTS $key")
     spark.sql(s"CREATE TABLE $key (id BIGINT, v BIGINT)")
@@ -401,7 +387,6 @@ class Round13OpsSpec extends SparkTestBase {
   }
 
   test("maxBytesPerTrigger caps batches by manifest bytes") {
-    registerCatalog()
     val key = "graft_lake.rlmb"
     spark.sql(s"DROP TABLE IF EXISTS $key")
     spark.sql(s"CREATE TABLE $key (id BIGINT, v BIGINT)")

@@ -26,12 +26,6 @@ import graft.sources.{GraftLake, LakeNdv, LakeStore}
   * `LakeNdv.mergedNdv` fails the exact-merge-above-K contract. */
 class Round13bOpsSpec extends SparkTestBase {
 
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
-
   // ----------------- KMV sketch unit contracts
 
   test("KMV: exact below K, exact merge above K, saturated estimate in contract") {
@@ -80,7 +74,6 @@ class Round13bOpsSpec extends SparkTestBase {
   // ----------------- manifest + checkpoint round-trip
 
   test("ndv sketches survive the log, a cold replay, and checkpoint cadence") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.ndvrt")
     spark.sql("""CREATE TABLE graft_lake.ndvrt (id BIGINT, cat STRING)
                 |TBLPROPERTIES ('graft.ndv.columns' = 'id,cat')""".stripMargin)
@@ -106,7 +99,6 @@ class Round13bOpsSpec extends SparkTestBase {
   // ----------------- estimateStatistics exposes distinctCount
 
   test("scan statistics report merged NDV, shrunk by pushed filters") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.ndvcbo")
     spark.sql("""CREATE TABLE graft_lake.ndvcbo (id BIGINT, grp BIGINT)
                 |TBLPROPERTIES ('graft.ndv.columns' = 'id,grp')""".stripMargin)
@@ -144,7 +136,6 @@ class Round13bOpsSpec extends SparkTestBase {
   // ----------------- rewrite_deletes semantics
 
   private def morTable(name: String): String = {
-    registerCatalog()
     val key = s"graft_lake.$name"
     spark.sql(s"DROP TABLE IF EXISTS $key")
     spark.sql(s"""CREATE TABLE $key (id BIGINT, grp STRING, v BIGINT)
@@ -194,7 +185,6 @@ class Round13bOpsSpec extends SparkTestBase {
   }
 
   test("ndv columns refuse rename (like blooms); widening keeps one hash space") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.ndvren")
     spark.sql("""CREATE TABLE graft_lake.ndvren (id INT, cat STRING, free STRING)
                 |TBLPROPERTIES ('graft.ndv.columns' = 'id,cat')""".stripMargin)
@@ -224,7 +214,6 @@ class Round13bOpsSpec extends SparkTestBase {
   // ----------------- metadata-only DELETE gate (p74)
 
   test("partition-aligned DELETE is metadata-only; others fall back") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.md1")
     spark.sql("""CREATE TABLE graft_lake.md1 (id BIGINT, grp STRING, v BIGINT)
                 |PARTITIONED BY (grp)""".stripMargin)
@@ -266,7 +255,6 @@ class Round13bOpsSpec extends SparkTestBase {
   }
 
   test("metadata DELETE gate refuses transforms, old eras, and null literals") {
-    registerCatalog()
     // days() transform: a source-column equality is NOT group-decidable
     spark.sql("DROP TABLE IF EXISTS graft_lake.md3")
     spark.sql("""CREATE TABLE graft_lake.md3 (id BIGINT, s STRING)
@@ -298,7 +286,6 @@ class Round13bOpsSpec extends SparkTestBase {
   // ----------------- COPY INTO ledger atomicity (p77)
 
   test("copy_into: a failed ingest records nothing; the retry loads it all") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.cpin")
     spark.sql("""CREATE TABLE graft_lake.cpin (id BIGINT, v BIGINT)
                 |TBLPROPERTIES ('graft.constraints.nonneg' = 'v >= 0')""".stripMargin)
@@ -342,7 +329,6 @@ class Round13bOpsSpec extends SparkTestBase {
   // ----------------- streaming startingTimestamp
 
   test("startingTimestamp starts at the earliest commit at or after the instant") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.stts")
     spark.sql("CREATE TABLE graft_lake.stts (id BIGINT)")
     import spark.implicits._

@@ -24,12 +24,6 @@ import graft.sources.{GraftLake, LakeStore}
   * evolution silently). */
 class Round14OpsSpec extends SparkTestBase {
 
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
-
   private def stageOne(src: String, name: String,
       df: org.apache.spark.sql.DataFrame): Unit = {
     val fs = new org.apache.hadoop.fs.Path(src)
@@ -45,7 +39,6 @@ class Round14OpsSpec extends SparkTestBase {
   // ----------------- COPY INTO ledger scale contract (p77 rebuild)
 
   test("copy_into: commit-log entry size is O(files-in-commit), not O(ingest history)") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.cpscale"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -94,7 +87,6 @@ class Round14OpsSpec extends SparkTestBase {
   }
 
   test("copy_into: legacy props-carried ledger migrates and retires") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.cplegacy"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -124,7 +116,6 @@ class Round14OpsSpec extends SparkTestBase {
   // ----------------- startingTimestamp resolves against MAIN only
 
   test("versionAtOrAfter ignores branch commits (no silent empty-forever stream)") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.tsmain"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -135,9 +126,9 @@ class Round14OpsSpec extends SparkTestBase {
     Thread.sleep(30)
     // after the cut: ONLY branch commits land
     LakeStore.createRef(key, "audit", "branch") // v2 (ref=audit)
-    spark.conf.set("graft.lake.branch", "audit")
-    try Seq(3L).toDF("id").writeTo(key).append() // v3 (ref=audit)
-    finally spark.conf.unset("graft.lake.branch")
+    GraftSession.withConf(spark)("graft.lake.branch" -> "audit") {
+      Seq(3L).toDF("id").writeTo(key).append() // v3 (ref=audit)
+    }
     val st = LakeStore.get(key).get
     assert(st.snapshots(st.latestVersion).ref === "audit")
     // versionAt (at-or-before) already filtered to main; the dual must
@@ -204,7 +195,6 @@ class Round14OpsSpec extends SparkTestBase {
   // ----------------- ANALYZE back-fill (p79)
 
   test("analyze: back-fills exact NDV, survives cold replay, stays CDC-silent") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.anz1"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -240,7 +230,6 @@ class Round14OpsSpec extends SparkTestBase {
   }
 
   test("analyze: mixed-era group keys round-trip; refusals are loud") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.anz2"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -273,7 +262,6 @@ class Round14OpsSpec extends SparkTestBase {
   }
 
   test("analyze: sequential analyzes UNION the roster (no clobber)") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.anz3"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -291,7 +279,6 @@ class Round14OpsSpec extends SparkTestBase {
   }
 
   test("analyze with_blooms: back-filled blooms skip files on equality probes") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.anzbloom"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -332,7 +319,6 @@ class Round14OpsSpec extends SparkTestBase {
   // ----------------- statistics honesty under row-level deletes
 
   test("nullCount reports with distinctCount, and both suppress under live DVs") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.nstats"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -371,7 +357,6 @@ class Round14OpsSpec extends SparkTestBase {
   // ----------------- stream schema guard: dropped columns do not poison
 
   test("full-history stream replays an ADD-then-DROP column without failing") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.sevdrop"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -404,7 +389,6 @@ class Round14OpsSpec extends SparkTestBase {
   // ----------------- true concurrent-writer OCC stress (no choreography)
 
   test("OCC stress: racing writer threads never lose a committed row") {
-    registerCatalog()
     val key = "graft_lake.occstress"
     spark.sql(s"DROP TABLE IF EXISTS $key")
     spark.sql(s"""CREATE TABLE $key (id BIGINT, src STRING, v BIGINT)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GraftLake, GraftLakeCatalog, LakeStore}
+import graft.sources.{GraftLake, LakeStore}
 
 /** Round-15 lake contracts: delta-encoded snapshot state (per-commit
   * add/remove deltas, one materialized live list per ref, below-window
@@ -11,12 +11,6 @@ import graft.sources.{GraftLake, GraftLakeCatalog, LakeStore}
   * OCC stress (COPY INTO ledger + streaming-epoch sink exactly-once
   * under racing writers). */
 class Round15OpsSpec extends SparkTestBase {
-
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[GraftLakeCatalog].getName)
 
   private def withWindow[T](w: Int)(body: => T): T = {
     val saved = sys.props.get("graft.lake.snapshot.window")
@@ -29,7 +23,6 @@ class Round15OpsSpec extends SparkTestBase {
   }
 
   test("snapshot state is delta-encoded: one live list per ref, history paged, filesAt exact") {
-    registerCatalog()
     withWindow(4) {
       import spark.implicits._
       val key = "graft_lake.deltas"
@@ -76,7 +69,6 @@ class Round15OpsSpec extends SparkTestBase {
   }
 
   test("cold replay rebuilds the same materialization + paging shape across a checkpoint") {
-    registerCatalog()
     withWindow(4) {
       import spark.implicits._
       val key = "graft_lake.deltacold"
@@ -118,7 +110,6 @@ class Round15OpsSpec extends SparkTestBase {
   }
 
   test("a branch head demoted below the window pages at demotion, matching cold replay") {
-    registerCatalog()
     withWindow(4) {
       import spark.implicits._
       val key = "graft_lake.demopage"
@@ -126,10 +117,8 @@ class Round15OpsSpec extends SparkTestBase {
       spark.sql(s"CREATE TABLE $key (id BIGINT)")
       Seq(1L, 2L).toDF("id").coalesce(1).writeTo(key).append() // v1
       LakeStore.createRef(key, "dev", "branch") // v2: dev head
-      def onBranch[T](body: => T): T = {
-        spark.conf.set("graft.lake.branch", "dev")
-        try body finally spark.conf.unset("graft.lake.branch")
-      }
+      def onBranch[T](body: => T): T =
+        GraftSession.withConf(spark)("graft.lake.branch" -> "dev")(body)
       onBranch { Seq(10L).toDF("id").coalesce(1).writeTo(key).append() } // v3: dev head WITH payload
       (0 until 8).foreach { i => // v4..v11: dev's head falls far below the window
         Seq(100L + i).toDF("id").coalesce(1).writeTo(key).append()
@@ -160,7 +149,6 @@ class Round15OpsSpec extends SparkTestBase {
   }
 
   test("merge-on-read delete state pages with the window and reloads exactly") {
-    registerCatalog()
     withWindow(4) {
       import spark.implicits._
       val key = "graft_lake.delpage"
@@ -191,7 +179,6 @@ class Round15OpsSpec extends SparkTestBase {
   }
 
   test("streaming delivery plans from per-commit add-lists: zero live-set reconstructions") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.stdelta"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -225,7 +212,6 @@ class Round15OpsSpec extends SparkTestBase {
   }
 
   test("a schema-changing REPLACE fails a running stream loudly; mergeSchema opts out") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.strepl"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -291,7 +277,6 @@ class Round15OpsSpec extends SparkTestBase {
   }
 
   test("ANALYZE lands sketches in executor-written sidecars: pointers in the manifest, O(names) on the driver") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.anzside"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -351,7 +336,6 @@ class Round15OpsSpec extends SparkTestBase {
   }
 
   test("VACUUM plans its keep-set through paged history exactly") {
-    registerCatalog()
     withWindow(4) {
       import spark.implicits._
       val key = "graft_lake.vacpage"
@@ -389,7 +373,6 @@ class Round15OpsSpec extends SparkTestBase {
   }
 
   test("OCC stress: COPY INTO ledger and epoch sink stay exactly-once under racing writers") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.occwide"
     spark.sql(s"DROP TABLE IF EXISTS $key")

@@ -4,7 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{GraftLake, GraftLakeCatalog, LakeCdf, LakeStore}
+import graft.sources.{GraftLake, LakeCdf, LakeStore}
 
 /** Round-16 lake contracts: O(commit-delta) change-feed planning (the
   * last O(live files)-per-commit driver loop), structural sharing of
@@ -14,12 +14,6 @@ import graft.sources.{GraftLake, GraftLakeCatalog, LakeCdf, LakeStore}
   * caches, cross-PROCESS commit atomicity (link(2) claim), and a stream
   * restart racing a concurrent writer. */
 class Round16OpsSpec extends SparkTestBase {
-
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[GraftLakeCatalog].getName)
 
   private def withWindow[T](w: Int)(body: => T): T = {
     val saved = sys.props.get("graft.lake.snapshot.window")
@@ -40,7 +34,6 @@ class Round16OpsSpec extends SparkTestBase {
   // ------------------------------------------------------------ task 1
 
   test("change-feed planning is O(commit delta): one range seed, no per-commit full-list builds") {
-    registerCatalog()
     withWindow(2) { // most of the range's deltas live PAGED in the log
       import spark.implicits._
       val key = "graft_lake.cdfdelta"
@@ -91,7 +84,6 @@ class Round16OpsSpec extends SparkTestBase {
   // ------------------------------------------------------------ task 2
 
   test("snapshot shells share schema instances: O(distinct schemas) after cold replay") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.shellshare"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -120,7 +112,6 @@ class Round16OpsSpec extends SparkTestBase {
   }
 
   test("commitGroups page with the window and reload exactly for CHANGES planning and history") {
-    registerCatalog()
     withWindow(2) {
       import spark.implicits._
       val key = "graft_lake.groupspage"
@@ -158,7 +149,6 @@ class Round16OpsSpec extends SparkTestBase {
   // ------------------------------------------------------------ task 8
 
   test("paging window is table-tunable via graft.lake.snapshot.window property") {
-    registerCatalog()
     import spark.implicits._
     // tight window: pages aggressively despite the global default of 24
     val tight = "graft_lake.wintight"
@@ -221,7 +211,6 @@ class Round16OpsSpec extends SparkTestBase {
   }
 
   test("COPY INTO ledger folds incrementally: O(new commits) per ingest, not O(versions)") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.ledgerinc"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -263,7 +252,6 @@ class Round16OpsSpec extends SparkTestBase {
   // ---------------------------------------------------- ADVICE medium
 
   test("invalidateCache purges paged-delta cache: external drop/recreate cannot serve stale deltas") {
-    registerCatalog()
     withWindow(2) {
       import spark.implicits._
       val a = "graft_lake.cachea"
@@ -302,7 +290,6 @@ class Round16OpsSpec extends SparkTestBase {
   // ------------------------------------------------------ ADVICE low 2
 
   test("VACUUM sweeps orphan stats sidecars but keeps referenced ones") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.sidecargc"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -351,7 +338,6 @@ class Round16OpsSpec extends SparkTestBase {
   // ------------------------------------------------------------ task 4
 
   test("cross-process commit atomicity: two JVMs racing appends lose no commit") {
-    registerCatalog()
     val key = "graft_lake.procrace"
     val n = 30
     LakeStore.drop(key)
@@ -388,7 +374,6 @@ class Round16OpsSpec extends SparkTestBase {
   }
 
   test("OPTIMIZE racing a row-level UPDATE aborts instead of losing the update") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.optrace"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -433,7 +418,6 @@ class Round16OpsSpec extends SparkTestBase {
   // ------------------------------------------------------------ task 7
 
   test("stream restart racing a concurrent writer delivers every committed row exactly once") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.restartrace"
     spark.sql(s"DROP TABLE IF EXISTS $key")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.sources.{GraftLake, GraftLakeCatalog, LakeCdf, LakeStore}
+import graft.sources.{GraftLake, LakeCdf, LakeStore}
 
 /** Round-17 lake contracts: the upsert-CDF fan-out bounded by per-file
   * key statistics (blooms / zones / null counts — chunk count tracks
@@ -14,12 +14,6 @@ import graft.sources.{GraftLake, GraftLakeCatalog, LakeCdf, LakeStore}
   * (one seed, rollback deltas exact — including resurrection of
   * positions a rolled-back merge-on-read DELETE had hidden). */
 class Round17OpsSpec extends SparkTestBase {
-
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[GraftLakeCatalog].getName)
 
   /** (emitted, pruned) fan-out counter deltas across `body`. */
   private def fanoutDelta[T](body: => T): (T, Long, Long) = {
@@ -33,7 +27,6 @@ class Round17OpsSpec extends SparkTestBase {
   // ------------------------------------------------- task 1: bloom prune
 
   test("upsert-CDF fan-out is bounded by blooms: chunks track files admitting the keys") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.cdfbloom"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -70,7 +63,6 @@ class Round17OpsSpec extends SparkTestBase {
   // -------------------------------------------------- task 1: zone prune
 
   test("upsert-CDF fan-out prunes via zone disjointness without blooms") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.cdfzone"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -99,7 +91,6 @@ class Round17OpsSpec extends SparkTestBase {
   // -------------------------------------------------- task 1: null keys
 
   test("upsert-CDF pruning is null-safe: a NULL key only prunes provably null-free files") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.cdfnull"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -135,7 +126,6 @@ class Round17OpsSpec extends SparkTestBase {
   // ----------------------------------------- task 2: link(2) fallback
 
   test("commit claims degrade to exists+rename when hard links are unavailable") {
-    registerCatalog()
     import spark.implicits._
     val saved = sys.props.get(LakeStore.NoHardLinksProp)
     sys.props.update(LakeStore.NoHardLinksProp, "true")
@@ -161,7 +151,6 @@ class Round17OpsSpec extends SparkTestBase {
   // --------------------------------- task 3: cross-process row-level OCC
 
   test("cross-process OCC: group-scoped read-modify-write serializes across JVMs") {
-    registerCatalog()
     val key = "graft_lake.rmwrace"
     val n = 20
     LakeStore.drop(key)
@@ -223,7 +212,6 @@ class Round17OpsSpec extends SparkTestBase {
   // ----------------------------- advice: layout-only marker is internal
 
   test("layout-only marker is internal: an ordinary write cannot self-label dataChange=false") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.layoutnonce"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -253,7 +241,6 @@ class Round17OpsSpec extends SparkTestBase {
   // ------------------------- advice: clone copies its ANALYZE sidecars
 
   test("shallow clone copies ANALYZE sidecars: source VACUUM cannot strand the clone's stats") {
-    registerCatalog()
     import spark.implicits._
     val src = "graft_lake.clstat_src"
     val dst = "graft_lake.clstat_dst"
@@ -295,7 +282,6 @@ class Round17OpsSpec extends SparkTestBase {
   // ------------------------------- task 5: checkpoint schema dedup disk
 
   test("checkpoint schema table: O(distinct schemas) bytes on disk, reader loads formats 2 and 3") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.ckptschema"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -363,7 +349,6 @@ class Round17OpsSpec extends SparkTestBase {
   // --------------------------------------- task 4: CDF across a RESTORE
 
   test("CDF range across a RESTORE: one seed, exact rollback deltas incl. DV resurrection") {
-    registerCatalog()
     import spark.implicits._
     val key = "graft_lake.cdfrestore"
     spark.sql(s"DROP TABLE IF EXISTS $key")

@@ -41,9 +41,6 @@ class Round18OpsSpec extends SparkTestBase {
 
   test("hard-link latch is per root: one degraded root leaves others linking") {
     import spark.implicits._
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").isDefined)
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     val latched = "graft_lake.r18_latched"
     val normal = "graft_lake.r18_normal"
     Seq(latched, normal).foreach(k => spark.sql(s"DROP TABLE IF EXISTS $k"))

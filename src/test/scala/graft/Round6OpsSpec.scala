@@ -144,7 +144,6 @@ class Round6OpsSpec extends SparkTestBase {
   }
 
   test("graft_maxsim codegen expression is bit-identical to the HOF reference") {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, Sf001)
       .withColumn("v", expr("transform(embedding, x -> cast(x as double))"))
       .select(col("vec_id"), col("v"))

@@ -22,7 +22,6 @@ class Round7OpsSpec extends SparkTestBase {
   }
 
   test("s16: composed rerank keeps the recall contract vs the exhaustive full scan") {
-    graft.functions.GraftFunctions.register(spark)
     for (sf <- Seq(Sf0001, Sf001)) {
       val composed = SimilarityQueries.s16MaxSim(spark, sf).collect()
       val byQ = composed.groupBy(_.getLong(0))

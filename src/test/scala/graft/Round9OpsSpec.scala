@@ -10,12 +10,6 @@ import graft.sources.{GraftLake, LakeStore}
   * independent construction, plus the loud-failure edges of ALTER. */
 class Round9OpsSpec extends SparkTestBase {
 
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
-
   test("p37: pre-ALTER snapshots keep the 3-column schema; nulls pad exactly the never-rescored rows") {
     val got = operators.PipelineQueries.p37SchemaEvolution(spark, Sf0001).collect()
     // v1 time travel surfaces the pre-evolution schema
@@ -44,7 +38,6 @@ class Round9OpsSpec extends SparkTestBase {
     // DROP/RENAME COLUMN and lossless retypes became metadata-only in
     // round 10 (column mapping + type widening) — what remains refused
     // is what no metadata move can make sound
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.alt")
     spark.sql("CREATE TABLE graft_lake.alt (id BIGINT, v BIGINT)")
     intercept[Exception] { // NOT NULL column cannot pad existing files
@@ -63,7 +56,6 @@ class Round9OpsSpec extends SparkTestBase {
   }
 
   test("p38/OPTIMIZE on handcrafted files: exact before/after skip counts, CDC-invisible, history intact") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.optx")
     spark.sql("CREATE TABLE graft_lake.optx (id BIGINT, v BIGINT)")
     import spark.implicits._
@@ -105,7 +97,6 @@ class Round9OpsSpec extends SparkTestBase {
   }
 
   test("VACUUM deletes exactly the unreferenced files + orphans, keeps retained history readable") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.vacx")
     spark.sql("CREATE TABLE graft_lake.vacx (id BIGINT, v BIGINT)")
     import spark.implicits._

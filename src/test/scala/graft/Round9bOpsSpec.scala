@@ -12,12 +12,6 @@ import graft.sources.{GraftLake, LakeStore}
   * the SQL null-semantics edge. */
 class Round9bOpsSpec extends SparkTestBase {
 
-  private def registerCatalog(): Unit =
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
-
   private def dataFiles(key: String): Set[String] = {
     val dir = new Path(LakeStore.dataDir(key))
     val fs = dir.getFileSystem(new Configuration())
@@ -27,7 +21,6 @@ class Round9bOpsSpec extends SparkTestBase {
   // ------------------------------------------------------------- p40
 
   test("p40/RESTORE is a manifest move: v1's exact files re-pointed, zero new data files, history append-only") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.rst")
     spark.sql("CREATE TABLE graft_lake.rst (id BIGINT, grp BIGINT) PARTITIONED BY (grp)")
     import spark.implicits._
@@ -55,7 +48,6 @@ class Round9bOpsSpec extends SparkTestBase {
   }
 
   test("p40/RESTORE refuses a vacuumed version and restores pre-ALTER schema") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.rstv")
     spark.sql("CREATE TABLE graft_lake.rstv (id BIGINT)")
     import spark.implicits._
@@ -89,7 +81,6 @@ class Round9bOpsSpec extends SparkTestBase {
   // ------------------------------------------------------------- p41
 
   test("p41/metadata tables answer from the manifest: history spans every commit, files equals the live set") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.meta1")
     spark.sql("CREATE TABLE graft_lake.meta1 (id BIGINT, grp BIGINT) PARTITIONED BY (grp)")
     import spark.implicits._
@@ -115,7 +106,6 @@ class Round9bOpsSpec extends SparkTestBase {
   }
 
   test("p41: a REAL table shadows the metadata suffix; unknown parents still error") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.shadow.history")
     spark.sql("CREATE TABLE graft_lake.shadow.history (note STRING)")
     import spark.implicits._
@@ -132,7 +122,6 @@ class Round9bOpsSpec extends SparkTestBase {
   // ------------------------------------------------------------- p42
 
   test("p42/CHECK constraints: SQL null-semantics pass, UNSET disarms, props survive cold replay") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.chk")
     spark.sql("CREATE TABLE graft_lake.chk (id BIGINT, v BIGINT)")
     spark.sql("ALTER TABLE graft_lake.chk SET TBLPROPERTIES ('graft.constraints.v_pos' = 'v > 0')")
@@ -165,7 +154,6 @@ class Round9bOpsSpec extends SparkTestBase {
   }
 
   test("p42: MERGE is constrained through the same writer; add-time validation scans existing rows") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.chkm")
     spark.sql("CREATE TABLE graft_lake.chkm (id BIGINT, v BIGINT)")
     import spark.implicits._
@@ -199,7 +187,6 @@ class Round9bOpsSpec extends SparkTestBase {
   // ------------------------------------------------------------- p43
 
   test("p43/shallow clone: zero-copy fork, independent divergence, own-dir rewrites") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.cl_dst")
     spark.sql("DROP TABLE IF EXISTS graft_lake.cl_src")
     spark.sql("CREATE TABLE graft_lake.cl_src (id BIGINT, grp BIGINT) PARTITIONED BY (grp)")
@@ -249,7 +236,6 @@ class Round9bOpsSpec extends SparkTestBase {
   // ------------------------------------------------------------- p44
 
   test("p44/merge-on-read: DELETE/UPDATE write position-deletes, data files never move") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.mor1")
     spark.sql("""CREATE TABLE graft_lake.mor1 (id BIGINT, grp BIGINT)
                 |PARTITIONED BY (grp)
@@ -291,7 +277,6 @@ class Round9bOpsSpec extends SparkTestBase {
   }
 
   test("p44/merge-on-read MERGE: all three clauses as one delta commit; CDC classifies it; VACUUM keeps live DVs") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.mor2")
     spark.sql("""CREATE TABLE graft_lake.mor2 (id BIGINT, grp BIGINT, v BIGINT)
                 |PARTITIONED BY (grp)
@@ -327,7 +312,6 @@ class Round9bOpsSpec extends SparkTestBase {
   // ------------------------------------------------------------- st15
 
   test("st15/lake streaming source: non-append history poisons the stream loudly") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.stx")
     spark.sql("CREATE TABLE graft_lake.stx (id BIGINT)")
     import spark.implicits._
@@ -354,7 +338,6 @@ class Round9bOpsSpec extends SparkTestBase {
   // --------------------------------------------- scan maturity (stats/limit)
 
   test("manifest statistics let Catalyst auto-broadcast a small lake table (no hint)") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.dim")
     spark.sql("CREATE TABLE graft_lake.dim (id BIGINT, name STRING)")
     import spark.implicits._
@@ -370,7 +353,6 @@ class Round9bOpsSpec extends SparkTestBase {
   }
 
   test("pushed LIMIT plans O(needed) files from the manifest") {
-    registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graft_lake.lim")
     spark.sql("CREATE TABLE graft_lake.lim (id BIGINT, grp BIGINT) PARTITIONED BY (grp)")
     import spark.implicits._

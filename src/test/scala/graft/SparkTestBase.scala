@@ -6,16 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite (guide: lazy val, not per-test). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
+  lazy val spark: SparkSession = {
+    // a per-JVM warehouse, so concurrent test runs never share one; a
+    // system property, because SparkConf reads spark.* properties at build
+    sys.props.getOrElseUpdate("spark.sql.warehouse.dir",
       s"/tmp/graft_test_warehouse_${ProcessHandle.current().pid()}")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    GraftSession(getClass.getSimpleName, 4)
+  }
 
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"

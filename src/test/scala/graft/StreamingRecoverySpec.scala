@@ -97,10 +97,6 @@ class StreamingRecoverySpec extends SparkTestBase {
     // st13's additive MERGE is NOT idempotent by itself; this is the
     // crash ordering that would double-apply a batch without the
     // high-water-mark guard — side effect committed, checkpoint not.
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[graft.sources.GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[graft.sources.GraftLakeCatalog].getName)
     val root = s"/tmp/graft_stream_${Sidecars.tag(Sf0001)}/recovery_merge_spec"
     def rm(p: java.nio.file.Path): Unit = {
       if (java.nio.file.Files.isDirectory(p))

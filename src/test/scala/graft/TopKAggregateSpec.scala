@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{GraftFunctions, TopKBuffer}
+import graft.functions.TopKBuffer
 import graft.operators.{ExtendedQueries, StarQueries}
 import org.apache.spark.sql.functions._
 
@@ -26,7 +26,6 @@ class TopKAggregateSpec extends SparkTestBase {
   }
 
   test("ties on ord break by smallest payload; k > group size returns the whole group") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     Seq((1L, 5.0, 10L), (1L, 5.0, 7L), (1L, 3.0, 1L))
       .toDF("g", "v", "id").createOrReplaceTempView("tk_ties")
@@ -41,7 +40,6 @@ class TopKAggregateSpec extends SparkTestBase {
   }
 
   test("null ord or payload rows are skipped") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     Seq((1L, Some(5.0), Some(10L)), (1L, None, Some(7L)), (1L, Some(9.0), None))
       .toDF("g", "v", "id").createOrReplaceTempView("tk_nulls")

@@ -19,10 +19,6 @@ class CopyTokenSpec extends graft.SparkTestBase {
     LakeStore.encodeCopyIds(ids)
 
   test("an interleaved plain append cannot steal a pending ingest's copy ids") {
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[GraftLakeCatalog].getName)
     import spark.implicits._
     val key = "graft_lake.cptoken"
     spark.sql(s"DROP TABLE IF EXISTS $key")
@@ -53,10 +49,6 @@ class CopyTokenSpec extends graft.SparkTestBase {
   }
 
   test("concurrent COPY INTO runs cannot double-ingest the same file") {
-    if (!spark.conf.getOption("spark.sql.catalog.graft_lake").contains(
-        classOf[GraftLakeCatalog].getName))
-      spark.conf.set("spark.sql.catalog.graft_lake",
-        classOf[GraftLakeCatalog].getName)
     import spark.implicits._
     val key = "graft_lake.cprace"
     spark.sql(s"DROP TABLE IF EXISTS $key")
